@@ -2,7 +2,7 @@ package graft.cdc
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{Instant, LocalDate, LocalDateTime, LocalTime, ZoneOffset}
 
 /** Binary codec for the scheme-66 CDC wire format (SURVEY.md §1.1, M1).
   *
@@ -16,7 +16,20 @@ import java.time.{LocalDate, LocalDateTime, ZoneOffset}
   *
   * All multi-byte integers are big-endian (`ld2/ld4/ld8`, ec:2647-2678);
   * IEEE floats are big-endian on the wire (`lddbl/ldfloat` byte-swap on
-  * little-endian hosts, ec:2680-2720) — `ByteBuffer.BIG_ENDIAN` gives both.
+  * little-endian hosts, ec:2680-2720). The encoder writes through a
+  * `ByteBuffer` (big-endian by default); the decoder reads both with
+  * shifts at absolute offsets.
+  *
+  * Decode is in place, as the reference's `fetchone` decodes in its read
+  * buffer (ec:2228-2368): a record is decoded at (array, offset, length)
+  * wherever its frame's bytes already are — the caller's chunk, or the
+  * head of [[FrameBuffer]]'s buffer for a frame that spanned two chunks —
+  * and no payload is copied. A row image's columns go straight into one
+  * value array per row, with no tuple or `ColValue` per column
+  * ([[RowColumns]]); DECIMAL digits go straight into a long (or 128 bits
+  * past 18 digits), with no digit string. What a decoded record allocates
+  * is what the `CdcRecord` API returns: the record, its value array, and
+  * each column's host value.
   *
   * NULLs are in-band sentinels per type, as Informix's `risnull` checks
   * (ec:823, 848, 865...). The reference links against the closed ESQL/C
@@ -194,96 +207,124 @@ object CdcCodec {
     }
   }
 
-  private def unpackDigits(bytes: Array[Byte], off: Int, nBytes: Int): String = {
-    val sb = new StringBuilder(nBytes * 2)
-    var i = 0
-    while (i < nBytes) {
-      val b = bytes(off + i) & 0xff
-      sb.append(('0' + (b >> 4)).toChar).append(('0' + (b & 0xf)).toChar)
-      i += 1
-    }
-    sb.toString
-  }
+  // Big-endian reads at absolute offsets (`ld2/ld4/ld8`, ec:2647-2678):
+  // the walk decodes in place in the caller's array, with no buffer view.
+  private def int2(b: Array[Byte], i: Int): Short =
+    ((b(i) << 8) | (b(i + 1) & 0xff)).toShort
+  private def int4(b: Array[Byte], i: Int): Int =
+    (b(i) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) |
+      (b(i + 3) & 0xff)
+  private def int8(b: Array[Byte], i: Int): Long =
+    (int4(b, i).toLong << 32) | (int4(b, i + 4) & 0xffffffffL)
 
   /** Decode one column (extract_column_to_dict, ec:783-1161); returns
     * (value-or-null, bytes consumed from the column area, var entries used).
-    * Spec-test surface — the row hot path shares one wrapped buffer. */
+    * Spec-test surface — the row walk calls [[decodeValue]] directly. */
   private[cdc] def decodeColumn(spec: ColSpec, bytes: Array[Byte], off: Int,
-                                varLens: IndexedSeq[Int], varIdx: Int): (Any, Int, Int) =
-    decodeColumnBuf(spec, bytes, ByteBuffer.wrap(bytes), off,
-      if (varLens.isEmpty) EmptyVarLens else varLens.toArray, varIdx)
+                                varLens: IndexedSeq[Int], varIdx: Int): (Any, Int, Int) = {
+    val t = spec.colType
+    val len = if (t.isVarLen) varLens(varIdx) else t.wireSize
+    (decodeValue(t, bytes, off, len), len, if (t.isVarLen) 1 else 0)
+  }
 
-  private val EmptyVarLens = Array.emptyIntArray
-
-  private def decodeColumnBuf(spec: ColSpec, bytes: Array[Byte], buf: ByteBuffer,
-                              off: Int, varLens: Array[Int],
-                              varIdx: Int): (Any, Int, Int) = {
-    spec.colType match {
-      case ColType.Int2 =>
-        val v = buf.getShort(off)
-        (if (v == NullInt2) null else v, 2, 0)
+  /** The value of one column whose wire bytes are `b[off, off + len)`:
+    * `len` is the type's wire size, or for var-length text its var-len
+    * array entry (prefix included). */
+  private def decodeValue(t: ColType, b: Array[Byte], off: Int, len: Int): Any =
+    t match {
       case ColType.Int4 =>
-        val v = buf.getInt(off)
-        (if (v == NullInt4) null else v, 4, 0)
+        val v = int4(b, off)
+        if (v == NullInt4) null else v
       case ColType.Bigint =>
-        val v = buf.getLong(off)
-        (if (v == NullInt8) null else v, 8, 0)
+        val v = int8(b, off)
+        if (v == NullInt8) null else v
+      case ColType.Int2 =>
+        val v = int2(b, off)
+        if (v == NullInt2) null else v
       case ColType.Int8 =>
-        val sign = buf.getShort(off)
-        val v = if (sign == NullSign) null else {
-          val lo = buf.getInt(off + 2) & 0xffffffffL
-          val hi = buf.getInt(off + 6) & 0xffffffffL
+        val sign = int2(b, off)
+        if (sign == NullSign) null else {
+          val lo = int4(b, off + 2) & 0xffffffffL
+          val hi = int4(b, off + 6) & 0xffffffffL
           sign * ((hi << 32) | lo)
         }
-        (v, 10, 0)
       case ColType.DateDay =>
-        val v = buf.getInt(off)
+        val v = int4(b, off)
         // java.time.LocalDate, not java.sql.Date: epoch-day arithmetic with
         // no calendar/timezone round-trip, and Spark encoders map it to
         // DateType directly — the envelope stays primitive-friendly.
-        (if (v == NullInt4) null else LocalDate.ofEpochDay(v + DateEpoch), 4, 0)
-      case ColType.Bool =>
-        (if (bytes(off) == 1) null else bytes(off + 1) != 0, 2, 0)
-      case ColType.Char(n) =>
-        (if (bytes(off) == 0) null else new String(bytes, off, n, UTF_8), n, 0)
-      case v: ColType.Varchar.type => decodeVarText(bytes, off, varLens(varIdx), v.prefix)
-      case v: ColType.Lvarchar.type => decodeVarText(bytes, off, varLens(varIdx), v.prefix)
+        if (v == NullInt4) null else LocalDate.ofEpochDay(v + DateEpoch)
+      case ColType.Bool => if (b(off) == 1) null else b(off + 1) != 0
+      case _: ColType.Char => if (b(off) == 0) null else new String(b, off, len, UTF_8)
+      case v: ColType.Varchar.type => decodeVarText(b, off, len, v.prefix)
+      case v: ColType.Lvarchar.type => decodeVarText(b, off, len, v.prefix)
       case ColType.Float8 =>
-        val raw = buf.getLong(off)
-        (if (raw == -1L) null else java.lang.Double.longBitsToDouble(raw), 8, 0)
+        val raw = int8(b, off)
+        if (raw == -1L) null else java.lang.Double.longBitsToDouble(raw)
       case ColType.Float4 =>
-        val raw = buf.getInt(off)
-        (if (raw == -1) null else java.lang.Float.intBitsToFloat(raw), 4, 0)
-      case ColType.Dec(p, s) =>
-        val nBytes = (p + 1) / 2
-        val v = bytes(off) match {
-          case 0 => null
-          case sign =>
-            val unscaled = new java.math.BigInteger(unpackDigits(bytes, off + 1, nBytes))
-            val bd = new java.math.BigDecimal(unscaled, s)
-            if (sign == 2) bd.negate() else bd
-        }
-        (v, 1 + nBytes, 0)
+        val raw = int4(b, off)
+        if (raw == -1) null else java.lang.Float.intBitsToFloat(raw)
+      case ColType.Dec(p, s) => decodeDecimal(b, off, p, s)
       case ColType.DTime =>
-        val v = if (bytes(off) == 0) null else {
-          def un(i: Int): Int = { val b = bytes(off + i) & 0xff; (b >> 4) * 10 + (b & 0xf) }
-          val ldt = LocalDateTime.of(
-            un(1) * 100 + un(2), un(3), un(4), un(5), un(6), un(7),
-            (un(8) * 10000 + un(9) * 100 + un(10)) * 1000)
-          // java.time.Instant (UTC wall clock), not java.sql.Timestamp —
+        if (b(off) == 0) null else {
+          def un(i: Int): Int = { val x = b(off + i) & 0xff; (x >> 4) * 10 + (x & 0xf) }
+          // LocalDate/LocalTime.of validate the digit groups; the result is
+          // a java.time.Instant (UTC wall clock), not java.sql.Timestamp —
           // see the DateDay note.
-          ldt.toInstant(ZoneOffset.UTC)
+          val day = LocalDate.of(un(1) * 100 + un(2), un(3), un(4)).toEpochDay
+          val time = LocalTime.of(un(5), un(6), un(7),
+            (un(8) * 10000 + un(9) * 100 + un(10)) * 1000)
+          Instant.ofEpochSecond(day * 86400L + time.toSecondOfDay, time.getNano)
         }
-        (v, 11, 0)
     }
+
+  private def decodeVarText(b: Array[Byte], off: Int, varLen: Int, prefix: Int): String = {
+    val colLen = varLen - prefix
+    if (colLen == 1 && b(off + prefix) == 0) null
+    else new String(b, off + prefix, colLen, UTF_8)
   }
 
-  private def decodeVarText(bytes: Array[Byte], off: Int, varLen: Int,
-                            prefix: Int): (Any, Int, Int) = {
-    val colLen = varLen - prefix
-    val v = if (colLen == 1 && bytes(off + prefix) == 0) null
-      else new String(bytes, off + prefix, colLen, UTF_8)
-    (v, varLen, 1)
+  /** One packed BCD byte as its two digits' value, 0..99. */
+  private def digitPair(x: Byte): Int = {
+    val hi = (x >> 4) & 0xf
+    val lo = x & 0xf
+    require(hi <= 9 && lo <= 9, f"invalid BCD byte 0x${x & 0xff}%02x in a DECIMAL")
+    hi * 10 + lo
+  }
+
+  /** DECIMAL(p,s): the sign byte, then ⌈p/2⌉ BCD digit pairs, straight to
+    * the unscaled value. Up to 18 digits (9 pairs) fit a long exactly; a
+    * wider column carries on in 128 bits, enough for Spark's 38 digits. */
+  private def decodeDecimal(b: Array[Byte], off: Int, p: Int,
+                            s: Int): java.math.BigDecimal = {
+    val sign = b(off)
+    if (sign == 0) null else {
+      val end = off + 1 + (p + 1) / 2
+      var i = off + 1
+      var lo = 0L
+      val longEnd = math.min(end, i + 9)
+      while (i < longEnd) { lo = lo * 100 + digitPair(b(i)); i += 1 }
+      if (i == end) java.math.BigDecimal.valueOf(if (sign == 2) -lo else lo, s)
+      else {
+        var hi = 0L
+        while (i < end) {       // (hi, lo) = (hi, lo) * 100 + pair, unsigned
+          val lo100 = lo * 100
+          hi = hi * 100 + Math.multiplyHigh(lo, 100L) + ((lo >> 63) & 100L)
+          lo = lo100 + digitPair(b(i))
+          if (java.lang.Long.compareUnsigned(lo, lo100) < 0) hi += 1
+          i += 1
+        }
+        val mag = new Array[Byte](16)
+        var k = 0
+        while (k < 8) {
+          mag(k) = (hi >>> (56 - 8 * k)).toByte
+          mag(8 + k) = (lo >>> (56 - 8 * k)).toByte
+          k += 1
+        }
+        val signum = if ((hi | lo) == 0L) 0 else if (sign == 2) -1 else 1
+        new java.math.BigDecimal(new java.math.BigInteger(signum, mag), s)
+      }
+    }
   }
 
   // --------------------------------------------------------------- row codec
@@ -344,40 +385,39 @@ object CdcCodec {
     else value.asInstanceOf[String].getBytes(UTF_8)
   private val NullVarText = Array[Byte](0)
 
-  /** Decode a row image payload with the registered schema
-    * (extract_columns_to_list + extract_iud, ec:1163-1304). One buffer
-    * wrap per row; the column walk reads at absolute offsets. */
-  def decodeRowPayload(recordNumber: Int, payload: Array[Byte],
-                       registry: SchemaRegistry): RowImage = {
-    val buf = ByteBuffer.wrap(payload)
-    val seq = buf.getLong(0)
-    val txid = buf.getInt(8)
-    val tabid = buf.getInt(12)
-    val flags = buf.getInt(16)
+  /** Decode a row image in place — payload `b[off, off + len)` — with the
+    * registered schema (extract_columns_to_list + extract_iud,
+    * ec:1163-1304). Fixed-width columns advance by their wire size,
+    * var-length ones by their next var-len array entry. */
+  private def decodeRow(recordNumber: Int, b: Array[Byte], off: Int, len: Int,
+                        registry: SchemaRegistry): RowImage = {
+    requirePayload(recordNumber, len, ChangeHeaderSz)
+    val tabid = int4(b, off + 12)
     val schema = registry(tabid)
-    val nVar = schema.numVarCols
-    val varLens = if (nVar == 0) EmptyVarLens else {
-      val a = new Array[Int](nVar)
-      var i = 0
-      while (i < nVar) { a(i) = buf.getInt(ChangeHeaderSz + 4 * i); i += 1 }
-      a
-    }
-    var off = ChangeHeaderSz + 4 * nVar
-    var varIdx = 0
-    val n = schema.cols.length
-    val cols = new Array[ColValue](n)
+    val types = schema.colTypes
+    val values = new Array[Any](types.length)
+    var varEntry = off + ChangeHeaderSz
+    var pos = varEntry + 4 * schema.numVarCols
     var c = 0
-    while (c < n) {
-      val spec = schema.cols(c)
-      val (v, adv, varUsed) = decodeColumnBuf(spec, payload, buf, off, varLens, varIdx)
-      off += adv
-      varIdx += varUsed
-      cols(c) = ColValue(spec.name, v)
+    while (c < types.length) {
+      val t = types(c)
+      val w = if (t.isVarLen) { val l = int4(b, varEntry); varEntry += 4; l }
+        else t.wireSize
+      values(c) = decodeValue(t, b, pos, w)
+      pos += w
       c += 1
     }
-    RowImage(recordNumber, seq, txid, tabid, flags,
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(cols))
+    require(pos <= off + len,
+      s"row image of tabid $tabid overruns its $len-byte payload by ${pos - off - len} bytes")
+    RowImage(recordNumber, int8(b, off), int4(b, off + 8), tabid,
+      int4(b, off + 16), new RowColumns(schema.colNames, values))
   }
+
+  /** In-place decode reads at absolute offsets, so a short payload must
+    * fail here instead of reading the next frame's bytes. */
+  private def requirePayload(recordNumber: Int, len: Int, min: Int): Unit =
+    require(len >= min,
+      s"record $recordNumber: payload of $len bytes, at least $min expected")
 
   // ------------------------------------------------------------ record codec
 
@@ -426,42 +466,73 @@ object CdcCodec {
       .putInt(PacketScheme).putInt(recordNumber)
       .put(payload).array()
 
-  /** Decode one record payload by record number (extract_record dispatcher,
-    * ec:1806-1923). Unknown numbers raise — the dispatcher's explicit
-    * CDC_REC_UNKNOWN error path. */
-  def decodeRecord(recordNumber: Int, payload: Array[Byte],
+  /** Decode one record whose payload is `bytes[off, off + len)`, in place,
+    * by record number (extract_record dispatcher, ec:1806-1923). Unknown
+    * numbers raise — the dispatcher's explicit CDC_REC_UNKNOWN error
+    * path. */
+  def decodeRecord(recordNumber: Int, bytes: Array[Byte], off: Int, len: Int,
                    registry: SchemaRegistry): CdcRecord = {
-    val buf = ByteBuffer.wrap(payload)
+    def need(min: Int): Unit = requirePayload(recordNumber, len, min)
     recordNumber match {
+      case INSERT | DELETE | UPDBEF | UPDAFT =>
+        decodeRow(recordNumber, bytes, off, len, registry)
       case BEGINTX =>
-        BeginTx(buf.getLong(0), buf.getInt(8), buf.getLong(12), buf.getInt(20))
-      case COMMTX => CommitTx(buf.getLong(0), buf.getInt(8), buf.getLong(12))
-      case RBTX => RollbackTx(buf.getLong(0), buf.getInt(8))
-      case DISCARD => DiscardTx(buf.getLong(0), buf.getInt(8))
-      case TRUNCATE => TruncateTab(buf.getLong(0), buf.getInt(8), buf.getInt(12))
-      case TIMEOUT => TimeoutBeat(buf.getLong(0))
+        need(24)
+        BeginTx(int8(bytes, off), int4(bytes, off + 8), int8(bytes, off + 12),
+          int4(bytes, off + 20))
+      case COMMTX =>
+        need(20)
+        CommitTx(int8(bytes, off), int4(bytes, off + 8), int8(bytes, off + 12))
+      case RBTX => need(12); RollbackTx(int8(bytes, off), int4(bytes, off + 8))
+      case DISCARD => need(12); DiscardTx(int8(bytes, off), int4(bytes, off + 8))
+      case TRUNCATE =>
+        need(16)
+        TruncateTab(int8(bytes, off), int4(bytes, off + 8), int4(bytes, off + 12))
+      case TIMEOUT => need(8); TimeoutBeat(int8(bytes, off))
       case ERROR => ErrorRecord
       case TABSCHEM =>
-        TabSchema(buf.getInt(0), buf.getInt(4), buf.getInt(8), buf.getInt(12),
-          buf.getInt(16), new String(payload, 20, payload.length - 21, UTF_8))
-      case INSERT | DELETE | UPDBEF | UPDAFT =>
-        decodeRowPayload(recordNumber, payload, registry)
+        need(21)
+        TabSchema(int4(bytes, off), int4(bytes, off + 4), int4(bytes, off + 8),
+          int4(bytes, off + 12), int4(bytes, off + 16),
+          new String(bytes, off + 20, len - 21, UTF_8))
       case n =>
         throw new IllegalArgumentException(s"unknown CDC record number $n")
     }
   }
 
+  /** Length of the frame whose header starts at `bytes(at)` — at least 16
+    * bytes must be there. Corrupt headers fail loudly, not mis-walk: a
+    * negative payload_sz would move the cursor backwards (infinite loop),
+    * an undersized header would overlap payloads. The reference trusts the
+    * server; a decoder over arbitrary files cannot. A Long, so that a
+    * payload_sz near Int.MaxValue cannot wrap negative and pass as a
+    * complete frame. */
+  private[cdc] def frameLength(bytes: Array[Byte], at: Int): Long = {
+    val headerSz = int4(bytes, at)
+    val payloadSz = int4(bytes, at + 4)
+    require(headerSz == RecordHeaderOffset,
+      s"invalid header_sz $headerSz (scheme-66 headers are $RecordHeaderOffset bytes)")
+    require(payloadSz >= 0, s"invalid negative payload_sz $payloadSz")
+    val scheme = int4(bytes, at + 8)
+    require(scheme == PacketScheme, s"invalid packet scheme $scheme")
+    headerSz.toLong + payloadSz
+  }
+
+  /** Decode the complete frame at `bytes(at)`, in place. */
+  private[cdc] def decodeFrameAt(bytes: Array[Byte], at: Int, len: Int,
+                                 registry: SchemaRegistry): CdcRecord =
+    decodeRecord(int4(bytes, at + 12), bytes, at + RecordHeaderOffset,
+      len - RecordHeaderOffset, registry)
+
   /** Decode exactly one frame (hot path for one-frame-per-message sources;
     * [[FrameBuffer]] handles multi-frame chunked streams). */
   def decodeFrame(bytes: Array[Byte], registry: SchemaRegistry): CdcRecord = {
-    val bb = ByteBuffer.wrap(bytes)
-    val headerSz = bb.getInt(0)
-    val payloadSz = bb.getInt(4)
-    require(bb.getInt(8) == PacketScheme, s"invalid packet scheme ${bb.getInt(8)}")
-    require(headerSz + payloadSz == bytes.length,
-      s"frame size mismatch: header says ${headerSz + payloadSz}, got ${bytes.length}")
-    decodeRecord(bb.getInt(12),
-      java.util.Arrays.copyOfRange(bytes, headerSz, headerSz + payloadSz), registry)
+    require(bytes.length >= RecordHeaderOffset,
+      s"frame of ${bytes.length} bytes is shorter than its header")
+    val len = frameLength(bytes, 0)
+    require(len == bytes.length,
+      s"frame size mismatch: header says $len, got ${bytes.length}")
+    decodeFrameAt(bytes, 0, bytes.length, registry)
   }
 
   /** Decode every complete frame in a buffer, threading registry updates on
@@ -470,22 +541,30 @@ object CdcCodec {
     * raise — callers with chunked input use [[FrameBuffer]]. */
   def decodeAll(bytes: Array[Byte],
                 registry: SchemaRegistry): (Vector[CdcRecord], SchemaRegistry) = {
-    var reg = registry
-    val out = Vector.newBuilder[CdcRecord]
-    val fb = new FrameBuffer(reg)
-    out ++= fb.append(bytes)
-    reg = fb.registry
+    val fb = new FrameBuffer(registry)
+    val out = fb.append(bytes)
     require(fb.pendingBytes == 0,
       s"${fb.pendingBytes} trailing bytes do not form a complete frame")
-    (out.result(), reg)
+    (out, fb.registry)
   }
 }
 
-/** Chunk-boundary-safe frame splitter — the buffered pull loop of
-  * `fetchone` (ec:2228-2368) as a reusable class: bytes arrive in arbitrary
-  * chunks (`ifx_lo_read` returns whatever the server has), complete frames
-  * are decoded and returned, and a trailing partial frame is compacted to
-  * the buffer head (memcpy, ec:2334-2338) to await the next chunk.
+/** Chunk-boundary-safe frame walk — the buffered pull loop of `fetchone`
+  * (ec:2228-2368) as a reusable class: bytes arrive in arbitrary chunks
+  * (`ifx_lo_read` returns whatever the server has), complete frames are
+  * decoded and returned, and a trailing partial frame waits for the next
+  * chunk.
+  *
+  * Frames decode in place, at (array, offset, length), wherever their
+  * bytes already are. With nothing pending, `append` walks the caller's
+  * chunk itself, and copies only its trailing partial frame to the head of
+  * `buf` — the reference's memcpy (ec:2334-2338). With a frame pending,
+  * it first moves just the bytes that complete that frame from the head of
+  * the next chunk into `buf` (write cursor `end`), decodes it there, and
+  * then walks the rest of the chunk in place. `buf` only ever holds one
+  * partial frame, always at its head (the read cursor is 0 between
+  * appends); it grows to the largest frame seen and is then reused, so a
+  * steady stream allocates nothing for buffering.
   *
   * Registry updates (TABSCHEM) happen inline during the walk, exactly where
   * the reference hooks `add_tabschema` (ec:2310-2316), so a row image
@@ -495,48 +574,52 @@ final class FrameBuffer(initial: SchemaRegistry) {
   import CdcRecords._
   private var reg = initial
   private var buf: Array[Byte] = Array.emptyByteArray
+  private var end = 0
 
   def registry: SchemaRegistry = reg
-  def pendingBytes: Int = buf.length
+  def pendingBytes: Int = end
 
   /** Append a chunk; return all records whose frames completed. */
   def append(chunk: Array[Byte]): Vector[CdcRecord] = {
-    buf = if (buf.isEmpty) chunk else buf ++ chunk
     val out = Vector.newBuilder[CdcRecord]
-    var start = 0
-    val bb = ByteBuffer.wrap(buf)
-    while (buf.length - start >= RecordHeaderOffset && {
-      val headerSz = bb.getInt(start)
-      val payloadSz = bb.getInt(start + 4)
-      // Corrupt sizes must fail loudly, not mis-walk: a negative payload_sz
-      // would move the cursor backwards (infinite loop), an undersized
-      // header would overlap payloads. The reference trusts the server; a
-      // decoder over arbitrary files cannot.
-      require(headerSz == RecordHeaderOffset,
-        s"invalid header_sz $headerSz (scheme-66 headers are $RecordHeaderOffset bytes)")
-      require(payloadSz >= 0, s"invalid negative payload_sz $payloadSz")
-      // Long arithmetic: headerSz + payloadSz near Int.MaxValue would wrap
-      // negative and make the completeness test spuriously true, crashing
-      // later inside copyOfRange instead of waiting for (or rejecting) the
-      // rest of the frame.
-      buf.length - start >= headerSz.toLong + payloadSz
-    }) {
-      val headerSz = bb.getInt(start)
-      val payloadSz = bb.getInt(start + 4)
-      val scheme = bb.getInt(start + 8)
-      require(scheme == PacketScheme, s"invalid packet scheme $scheme")
-      val recordNumber = bb.getInt(start + 12)
-      val payload = java.util.Arrays.copyOfRange(buf, start + headerSz,
-        start + headerSz + payloadSz)
-      val rec = CdcCodec.decodeRecord(recordNumber, payload, reg)
-      rec match {
-        case ts: TabSchema => reg = reg.withTabSchema(ts)
-        case _ =>
+    var at = 0
+    if (end > 0) {                            // complete the pending frame
+      if (end < RecordHeaderOffset) at = take(chunk, at, RecordHeaderOffset - end)
+      if (end >= RecordHeaderOffset) {
+        val len = CdcCodec.frameLength(buf, 0)
+        at += take(chunk, at, len - end)
+        if (end == len) { out += decode(buf, 0, end); end = 0 }
       }
-      out += rec
-      start += headerSz + payloadSz
     }
-    buf = if (start == 0) buf else java.util.Arrays.copyOfRange(buf, start, buf.length)
+    if (end == 0) {                           // walk the chunk in place
+      var whole = true
+      while (whole && chunk.length - at >= RecordHeaderOffset) {
+        val len = CdcCodec.frameLength(chunk, at)
+        whole = chunk.length - at >= len
+        if (whole) { out += decode(chunk, at, len.toInt); at += len.toInt }
+      }
+      take(chunk, at, chunk.length - at)      // the trailing partial frame
+    }
     out.result()
+  }
+
+  /** Copy up to `want` bytes of `chunk` from `at` to `buf(end)`, growing
+    * `buf` if needed; returns the number copied. */
+  private def take(chunk: Array[Byte], at: Int, want: Long): Int = {
+    val n = math.min(want, (chunk.length - at).toLong).toInt
+    if (end + n > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(end + n, 2 * buf.length))
+    System.arraycopy(chunk, at, buf, end, n)
+    end += n
+    n
+  }
+
+  private def decode(bytes: Array[Byte], at: Int, len: Int): CdcRecord = {
+    val rec = CdcCodec.decodeFrameAt(bytes, at, len, reg)
+    rec match {
+      case ts: TabSchema => reg = reg.withTabSchema(ts)
+      case _ =>
+    }
+    rec
   }
 }

@@ -40,9 +40,22 @@ final case class RollbackTx(seqNumber: Long, transactionId: Int) extends CdcReco
   * (ec:1186-1208). `value` is the decoded host value or null. */
 final case class ColValue(name: String, value: Any)
 
+/** The columns of one decoded row image: the schema's shared name array
+  * and the row's own value array. A [[ColValue]] is built only when a
+  * column is read, so decoding a row allocates one array for its values,
+  * not one tuple and one `ColValue` per column. */
+final class RowColumns private[cdc] (names: Array[String], values: Array[Any])
+    extends scala.collection.immutable.AbstractSeq[ColValue]
+    with IndexedSeq[ColValue] with Serializable {
+  def length: Int = values.length
+  def apply(i: Int): ColValue = ColValue(names(i), values(i))
+}
+
 /** INSERT/DELETE/UPDBEF/UPDAFT row image (ec:1220-1304): 20-byte change
   * header seq:int8 | txid:int4 | tabid:int4 | flags:int4, then the var-len
-  * length array, then column bytes. `recordNumber` distinguishes the four. */
+  * length array, then column bytes. `recordNumber` distinguishes the four.
+  * The decoder hands out `columns` as a [[RowColumns]]; any other
+  * `IndexedSeq` (a test's hand-built image) compares equal element-wise. */
 final case class RowImage(recordNumber: Int, seqNumber: Long,
                           transactionId: Int, tabid: Int, flags: Int,
                           columns: IndexedSeq[ColValue]) extends CdcRecord {
@@ -115,7 +128,8 @@ object CdcRecords {
 /** The 14 column wire types (SURVEY.md §1.3, decoders at ec:783-1218).
   *
   * Each type knows its fixed wire width (var-length types report -1 and are
-  * sized by the frame's var-len length array), its Spark [[DataType]], and
+  * sized by the frame's var-len length array; a constructor field, so the
+  * row walk calls one accessor for every type), its Spark [[DataType]], and
   * whether it participates in the var-len array walk. NULLs are in-band
   * sentinels, as in Informix (`risnull`, e.g. ec:823, 848); the concrete
   * sentinel per type is defined in [[CdcCodec]] where it is encoded/decoded.
@@ -125,77 +139,76 @@ object CdcRecords {
   * both correctly (SURVEY §1.3 commitment): DECIMAL as packed BCD digits,
   * DATETIME as the `YYYYMMDDhhmmss.ffffff` digit groups its dead code parsed.
   */
-sealed abstract class ColType(val isVarLen: Boolean) extends Serializable {
-  /** Fixed wire width in bytes; -1 for var-length types. */
-  def wireSize: Int
+sealed abstract class ColType(val isVarLen: Boolean,
+    /** Fixed wire width in bytes; -1 for var-length types. */
+    val wireSize: Int) extends Serializable {
   def sparkType: DataType
 }
 
 object ColType {
   /** INT8/SERIAL8 (ec:816-843): sign:int2 at +0, lo:uint4 at +2, hi:uint4
     * at +6 — 10 bytes. */
-  case object Int8 extends ColType(false) {
-    val wireSize = 10; val sparkType = LongType
+  case object Int8 extends ColType(false, 10) {
+    val sparkType = LongType
   }
   /** SERIAL/INT (ec:845-861): int4. */
-  case object Int4 extends ColType(false) {
-    val wireSize = 4; val sparkType = IntegerType
+  case object Int4 extends ColType(false, 4) {
+    val sparkType = IntegerType
   }
   /** DATE (ec:863-886): int4 day number; the reference converts via
     * `rjulmdy` — Informix day 1 = 1900-01-01, i.e. days since 1899-12-31. */
-  case object DateDay extends ColType(false) {
-    val wireSize = 4; val sparkType = DateType
+  case object DateDay extends ColType(false, 4) {
+    val sparkType = DateType
   }
   /** BOOL (ec:888-897): 2 bytes — null flag then value. */
-  case object Bool extends ColType(false) {
-    val wireSize = 2; val sparkType = BooleanType
+  case object Bool extends ColType(false, 2) {
+    val sparkType = BooleanType
   }
   /** CHAR(n) (ec:899-913): n bytes, blank-padded to declared size. */
-  final case class Char(n: Int) extends ColType(false) {
-    val wireSize = n; val sparkType = StringType
+  final case class Char(n: Int) extends ColType(false, n) {
+    val sparkType = StringType
   }
   /** VARCHAR/NVARCHAR (ec:915-934): length from the var-len array
     * (includes the 1-byte prefix), data after the prefix. */
-  case object Varchar extends ColType(true) {
-    val wireSize = -1; val sparkType = StringType
+  case object Varchar extends ColType(true, -1) {
+    val sparkType = StringType
     val prefix = 1
   }
   /** LVARCHAR (ec:936-954): same walk with a 3-byte prefix. */
-  case object Lvarchar extends ColType(true) {
-    val wireSize = -1; val sparkType = StringType
+  case object Lvarchar extends ColType(true, -1) {
+    val sparkType = StringType
     val prefix = 3
   }
   /** BIGINT (ec:956-971): int8. */
-  case object Bigint extends ColType(false) {
-    val wireSize = 8; val sparkType = LongType
+  case object Bigint extends ColType(false, 8) {
+    val sparkType = LongType
   }
   /** FLOAT (ec:973-988): 8-byte IEEE, big-endian on the wire (lddbl
     * byte-swaps on little-endian hosts, ec:2680-2700). */
-  case object Float8 extends ColType(false) {
-    val wireSize = 8; val sparkType = DoubleType
+  case object Float8 extends ColType(false, 8) {
+    val sparkType = DoubleType
   }
   /** SMALLFLOAT (ec:990-1005): 4-byte IEEE, big-endian on the wire. */
-  case object Float4 extends ColType(false) {
-    val wireSize = 4; val sparkType = FloatType
+  case object Float4 extends ColType(false, 4) {
+    val sparkType = FloatType
   }
   /** SMALLINT (ec:1007-1022): int2. */
-  case object Int2 extends ColType(false) {
-    val wireSize = 2; val sparkType = ShortType
+  case object Int2 extends ColType(false, 2) {
+    val sparkType = ShortType
   }
   /** DECIMAL/MONEY(p,s) (ec:1029-1066): packed decimal digits. Wire layout
     * (ours — the reference's decode is disabled dead code): 1 lead byte
     * (0 = NULL, 1 = +, 2 = −) then ceil(p/2) bytes of BCD digit pairs,
     * fixed-point with s fractional digits. */
-  final case class Dec(p: Int, s: Int) extends ColType(false) {
-    val wireSize = 1 + (p + 1) / 2
+  final case class Dec(p: Int, s: Int) extends ColType(false, 1 + (p + 1) / 2) {
     val sparkType = DecimalType(p, s)
   }
   /** DATETIME year-to-fraction / INTERVAL (ec:1073-1126): packed digit
     * groups `YYYYMMDDhhmmss` + 6 fractional digits (µs), exactly the string
     * layout the reference's dead decode path sliced (ec:1140-1146). Wire:
     * 1 null-flag byte + 10 BCD bytes (20 digits). */
-  case object DTime extends ColType(false) {
-    val wireSize = 11; val sparkType = TimestampType
+  case object DTime extends ColType(false, 11) {
+    val sparkType = TimestampType
   }
 }
 
@@ -207,6 +220,10 @@ final case class ColSpec(name: String, colType: ColType)
   * derived Spark schema. */
 final case class TableSchema(tabid: Int, tabname: String, cols: IndexedSeq[ColSpec]) {
   val numVarCols: Int = cols.count(_.colType.isVarLen)
+  /** Column names and types as arrays for the row walk; every decoded
+    * [[RowColumns]] of this schema shares `colNames`. */
+  private[cdc] val colNames: Array[String] = cols.map(_.name).toArray
+  private[cdc] val colTypes: Array[ColType] = cols.map(_.colType).toArray
   def sparkSchema: StructType =
     StructType(cols.map(c => StructField(c.name, c.colType.sparkType, nullable = true)))
 }

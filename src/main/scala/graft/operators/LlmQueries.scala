@@ -1211,10 +1211,15 @@ object LlmQueries {
     * materialize once per centroid via `transform`; the fold keeps the
     * (sim desc, cid asc) max. The init element is the array's head at
     * sim −2 (below any cosine, and NaN beats it too), so the result
-    * type follows the data. An EMPTY centroid table never reaches this
-    * expression: [[centroidsRow]] raises on it at broadcast-build time
-    * (r19, ADVICE) — guarding HERE, per row, measured ~3× on the
-    * assignment-heavy queries. */
+    * type follows the data. Nothing here guards an EMPTY centroid
+    * table: [[centroidsRow]] folds it to one row with an empty `_cents`,
+    * and every vector then reaches `element_at(_cents, 1)` on an empty
+    * array. Under ANSI mode (Spark 4's default) that raises
+    * INVALID_ARRAY_INDEX_IN_ELEMENT_AT while the assignment runs; with
+    * ANSI off every vector's cluster is NULL. A per-row guard here
+    * measured ~3× on the assignment-heavy queries, so the one guard is
+    * driver-side, in [[graft.streaming.VectorIndexStream]], on the
+    * centroid rows it collects once per stream run. */
   private[graft] def bestCentroidExpr(vecCol: String,
       normCol: String): org.apache.spark.sql.Column = expr(
     s"""aggregate(

@@ -42,10 +42,17 @@ private[graft] object Materialize {
     * construction: K = ⌈√N⌉ centroid rows, ≤ m·k codebook rows —
     * exactly the bytes every per-batch broadcast already shipped
     * through the driver, now shipped once per stream run instead of
-    * once per micro-batch). The caller owns the boundedness argument. */
-  def local(df: DataFrame): DataFrame = {
-    val rows = java.util.Arrays.asList(df.collect(): _*)
-    df.sparkSession.createDataFrame(rows, df.schema)
+    * once per micro-batch). The caller states the bound as `maxRows`:
+    * at most `maxRows + 1` rows are collected, and a frame with more
+    * fails loudly instead of being pulled whole into driver memory. */
+  def local(df: DataFrame, maxRows: Int): DataFrame = {
+    require(maxRows >= 0 && maxRows < Int.MaxValue,
+      s"maxRows must be in [0, Int.MaxValue), got $maxRows")
+    val got = df.limit(maxRows + 1).collect()
+    require(got.length <= maxRows,
+      s"Materialize.local: the frame has more than $maxRows rows, the " +
+        s"bound its caller gave (schema ${df.schema.simpleString})")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(got: _*), df.schema)
   }
 
   /** Materialize `df` AND report whether any row satisfied `flag` — off

@@ -51,6 +51,13 @@ object VectorIndexStream {
 
   private def codebookPath(indexDir: String) = s"$indexDir/_graft_pq_codebook"
 
+  /** Row bound of the centroid table for its driver collect
+    * ([[graft.operators.Materialize.local]]): K = `k` for an index
+    * created with a fixed `k`, else ⌈√N⌉ for its creation corpus of N
+    * vectors. N is not stored with the index, so with `k` = 0 the bound
+    * admits any corpus of up to 2^32 vectors. */
+  private def maxCentroids(k: Int): Int = if (k > 0) k else 1 << 16
+
   /** Per-STREAM cache of the frozen-vocabulary frames and their guard
     * metadata (r18 — guide §1.2 per-task work: the census showed the
     * gate re-resolving the IMMUTABLE centroid/codebook state every
@@ -109,10 +116,11 @@ object VectorIndexStream {
         .write.mode("overwrite").parquet(centroidsPath(indexDir))
     if (vocab.cents == null) {
       // Resolved + LOCALIZED once per stream run (bounded: K = ⌈√N⌉
-      // rows): per-batch broadcasts of these frames then build from
-      // driver memory — no per-batch scan/fold/collect jobs (r19).
+      // rows, [[maxCentroids]]; the folded row is one row): per-batch
+      // broadcasts of these frames then build from driver memory — no
+      // per-batch scan/fold/collect jobs (r19).
       vocab.cents = graft.operators.Materialize.local(
-        readCentroids(spark, indexDir))
+        readCentroids(spark, indexDir), maxCentroids(k))
       // The empty-vocabulary guard lives HERE, driver-side on the
       // already-collected rows (r19, ADVICE — an in-expression guard
       // measured as a real regression on the assignment queries): an
@@ -123,7 +131,7 @@ object VectorIndexStream {
           "index was created from an empty corpus; rebuild it from a " +
           "batch that carries vectors")
       vocab.centsRow = graft.operators.Materialize.local(
-        graft.api.Graft.ivfCentsRow(spark, vocab.cents, "cid", "cv"))
+        graft.api.Graft.ivfCentsRow(spark, vocab.cents, "cid", "cv"), 1)
     }
     val cents = vocab.cents
     val assigned = graft.api.Graft
@@ -141,7 +149,8 @@ object VectorIndexStream {
       if (vocab.centsInt == null)
         vocab.centsInt = graft.operators.Materialize.local(
           cents.selectExpr("cid AS ccid",
-            "transform(cv, x -> cast(round(cast(x AS double) * 1000000.0) AS bigint)) AS cq"))
+            "transform(cv, x -> cast(round(cast(x AS double) * 1000000.0) AS bigint)) AS cq"),
+          maxCentroids(k))
       val centsInt = vocab.centsInt
       val withRes = PersistedVectorIndex.withResiduals(
         assigned.withColumn("norm", expr(s"sqrt(dot_f32($vecCol, $vecCol))")),
@@ -157,7 +166,7 @@ object VectorIndexStream {
         // now come with them, so per-batch encode broadcasts build from
         // driver memory (r19).
         val cbkRows = graft.operators.Materialize.local(
-          spark.read.parquet(codebookPath(indexDir)))
+          spark.read.parquet(codebookPath(indexDir)), pqM * pqK)
         // Fail fast on a degenerate codebook (bounded driver metadata:
         // ≤ pqM rows, checked once per stream — the codebook is frozen).
         // The seeds are the creating batch's id < pqK rows — if that
@@ -173,7 +182,7 @@ object VectorIndexStream {
             s"with $idCol < $pqK, so PQ codes would encode as NULL; " +
             "rebuild the index from a batch that carries the seed ids")
         vocab.cbkFolded = graft.operators.Materialize.local(
-          PersistedVectorIndex.foldCodebook(cbkRows))
+          PersistedVectorIndex.foldCodebook(cbkRows), 1)
       }
       PersistedVectorIndex
         .encodeWithFoldedCodebook(withRes, vocab.cbkFolded, pqM, sub)

@@ -15,13 +15,47 @@ object CodecProps extends Properties("CdcCodec") {
     Gen.choose(1, 24).map(ColType.Char(_)), Gen.const(ColType.Varchar),
     Gen.const(ColType.Lvarchar), Gen.const(ColType.Float8),
     Gen.const(ColType.Float4),
-    Gen.zip(Gen.choose(2, 32), Gen.choose(0, 16))
-      .map { case (p, s) => ColType.Dec(p, math.min(s, p - 1)) },
+    // every precision Spark's DecimalType admits: up to 18 digits decode
+    // through one long, wider ones through 128 bits
+    Gen.choose(1, 38).flatMap(p => Gen.choose(0, p).map(ColType.Dec(p, _))),
     Gen.const(ColType.DTime))
 
-  private val asciiText: Gen[String] =
-    Gen.chooseNum(1, 20).flatMap(n =>
-      Gen.listOfN(n, Gen.alphaNumChar).map(_.mkString))
+  /** Text of 0–20 code points of every UTF-8 width: ASCII letters and
+    * digits, and 2-, 3- and 4-byte code points (a 4-byte one is a
+    * surrogate pair in the String). Lone surrogates, which UTF-8 cannot
+    * carry, and U+0000, the NULL sentinel's byte, are never drawn. */
+  private val utf8Text: Gen[String] = {
+    val codePoint = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toInt),
+      2 -> Gen.choose(0x80, 0x7ff),
+      2 -> Gen.oneOf(Gen.choose(0x800, 0xd7ff), Gen.choose(0xe000, 0xfffd)),
+      1 -> Gen.choose(0x10000, 0x10ffff))
+    Gen.chooseNum(0, 20).flatMap(n => Gen.listOfN(n, codePoint))
+      .map(cps => new String(cps.toArray, 0, cps.length))
+  }
+
+  /** DECIMAL(p,s) at full precision: an unscaled value of 0 to p digits
+    * (so zero, and both sides of 18 digits), either sign, the extremes
+    * ±(10^p − 1), and the values at the edges of one and two longs
+    * (2^64 needs the carry out of the low long). */
+  private def genDecimal(p: Int, s: Int): Gen[java.math.BigDecimal] = {
+    import java.math.BigInteger.{ONE, TEN}
+    val top = TEN.pow(p).subtract(ONE)
+    val edges = Seq(TEN.pow(18).subtract(ONE), TEN.pow(18),
+        ONE.shiftLeft(63).subtract(ONE), ONE.shiftLeft(63),
+        ONE.shiftLeft(64).subtract(ONE), ONE.shiftLeft(64))
+      .filter(_.compareTo(top) <= 0)
+    val unscaled = Gen.frequency(
+      6 -> Gen.zip(Gen.choose(0, p), Arbitrary.arbitrary[Long]).map {
+        case (digits, seed) =>
+          new java.math.BigInteger(4 * digits + 8, new java.util.Random(seed))
+            .mod(TEN.pow(digits))
+      },
+      2 -> Gen.oneOf(top +: edges))
+    Gen.zip(unscaled, Arbitrary.arbitrary[Boolean]).map { case (u, neg) =>
+      new java.math.BigDecimal(if (neg) u.negate else u, s)
+    }
+  }
 
   /** A value of the given type, or null (~1 in 5). */
   private def genValue(t: ColType): Gen[Any] = {
@@ -40,15 +74,12 @@ object CodecProps extends Properties("CdcCodec") {
       case ColType.Char(n) =>
         Gen.chooseNum(0, n).flatMap(k =>
           Gen.listOfN(k, Gen.alphaNumChar).map(_.mkString)).map(x => x: Any)
-      case ColType.Varchar | ColType.Lvarchar => asciiText.map(x => x: Any)
+      case ColType.Varchar | ColType.Lvarchar => utf8Text.map(x => x: Any)
       case ColType.Float8 => Arbitrary.arbitrary[Double]
         .suchThat(d => !d.isNaN).map(x => x: Any)
       case ColType.Float4 => Arbitrary.arbitrary[Float]
         .suchThat(f => !f.isNaN).map(x => x: Any)
-      case ColType.Dec(p, s) =>
-        Gen.choose(-math.pow(10, math.min(p - s, 15)).toLong + 1,
-            math.pow(10, math.min(p - s, 15)).toLong - 1)
-          .map(n => new java.math.BigDecimal(n).setScale(s): Any)
+      case ColType.Dec(p, s) => genDecimal(p, s).map(x => x: Any)
       case ColType.DTime =>
         Gen.choose(0L, 4102444800000000L) // micros up to year 2100
           .map(us => java.time.Instant.EPOCH
@@ -70,11 +101,13 @@ object CodecProps extends Properties("CdcCodec") {
       Gen.sequence[IndexedSeq[Any], Any](sch.cols.map(c => genValue(c.colType)))
         .map(vs => (sch, vs)))
 
-  /** CHAR decode keeps blank padding (ec:899-913); normalize for compare. */
-  private def norm(t: ColType, v: Any): Any = (t, v) match {
-    case (ColType.Char(_), s: String) =>
-      s.reverse.dropWhile(_ == ' ').reverse
-    case _ => v
+  /** A decoded value against the written one. CHAR decode keeps blank
+    * padding (ec:899-913), so it is trimmed first; a DECIMAL must be
+    * `BigDecimal.equals` to the written one, which compares the scale too. */
+  private def same(t: ColType, got: Any, want: Any): Boolean = (t, got) match {
+    case (ColType.Char(_), s: String) => s.reverse.dropWhile(_ == ' ').reverse == want
+    case (ColType.Dec(_, sc), d: java.math.BigDecimal) => d.scale == sc && d.equals(want)
+    case _ => got == want
   }
 
   // --------------------------------------------------------------- properties
@@ -86,9 +119,9 @@ object CodecProps extends Properties("CdcCodec") {
       val (recs, _) = CdcCodec.decodeAll(frame, reg)
       val img = recs.head.asInstanceOf[RowImage]
       val ok = img.seqNumber == 42L && img.transactionId == 7 &&
-        img.columns.length == values.length &&
+        img.columns.map(_.name) == schema.cols.map(_.name) &&
         schema.cols.zip(img.columns.map(_.value)).zip(values).forall {
-          case ((spec, got), want) => norm(spec.colType, got) == want
+          case ((spec, got), want) => same(spec.colType, got, want)
         }
       if (!ok) println(s"schema=$schema\nwant=$values\ngot =${img.columns.map(_.value)}")
       ok
@@ -134,12 +167,20 @@ object CodecProps extends Properties("CdcCodec") {
           100L + i, 1, 0, vs))
       }
       val bytes = stream.toByteArray
+      // Anywhere from no cut to a cut after every byte: whole frames,
+      // single-byte pieces, and frames spanning many appends, which grow
+      // the buffer and refill it from its head.
       val rnd = new scala.util.Random(seed)
-      val cuts = (0 until 5).map(_ => rnd.nextInt(bytes.length + 1))
-      val bounds = (0 +: cuts :+ bytes.length).distinct.sorted
+      val cuts = rnd.shuffle((1 until bytes.length).toVector)
+        .take(rnd.nextInt(bytes.length))
+      val bounds = (0 +: cuts :+ bytes.length).sorted
       val fb = new FrameBuffer(SchemaRegistry(Map(3 -> "t_prop")))
       val got = bounds.sliding(2).flatMap { case Seq(a, b) =>
-        fb.append(java.util.Arrays.copyOfRange(bytes, a, b))
+        val piece = java.util.Arrays.copyOfRange(bytes, a, b)
+        val recs = fb.append(piece)
+        // the caller may reuse its read buffer once append returns
+        java.util.Arrays.fill(piece, 0xff.toByte)
+        recs
       }.toVector
       fb.pendingBytes == 0 && got.length == 1 + values.length &&
         got.head.isInstanceOf[TabSchema] &&
@@ -147,7 +188,7 @@ object CodecProps extends Properties("CdcCodec") {
           val img = r.asInstanceOf[RowImage]
           img.seqNumber == 100L + i &&
             schema.cols.zip(img.columns.map(_.value)).zip(values(i)).forall {
-              case ((spec, g), w) => norm(spec.colType, g) == w
+              case ((spec, g), w) => same(spec.colType, g, w)
             }
         }
     }
@@ -172,9 +213,9 @@ object CodecProps extends Properties("CdcCodec") {
       val rows = recs.collect { case r: RowImage => r }
       rows.length == 2 &&
         s1.cols.zip(rows(0).columns.map(_.value)).zip(v1).forall {
-          case ((spec, g), w) => norm(spec.colType, g) == w } &&
+          case ((spec, g), w) => same(spec.colType, g, w) } &&
         s2.cols.zip(rows(1).columns.map(_.value)).zip(v2).forall {
-          case ((spec, g), w) => norm(spec.colType, g) == w } &&
+          case ((spec, g), w) => same(spec.colType, g, w) } &&
         reg(3).cols == s2.cols // v1 is gone, not merged
     }
 

@@ -59,7 +59,8 @@ class CodecSuite extends AnyFunSuite {
     val dec = ColSpec("d", ColType.Dec(32, 16))
     for (s <- Seq("-1234567890123456.1234567890123456",
                   "1234567890123456.1234567890123456",
-                  "0.0000000000000001", "-0.0000000000000001", "0")) {
+                  "0.0000000000000001", "-0.0000000000000001", "0",
+                  "1844.6744073709551616", "-1844.6744073709551616")) { // ±2^64 unscaled
       val v = new java.math.BigDecimal(s).setScale(16)
       val (bytes, _) = CdcCodec.encodeColumn(dec, v)
       assert(bytes.length == 17) // 1 sign byte + 32 digits BCD
@@ -109,7 +110,7 @@ class CodecSuite extends AnyFunSuite {
 
   test("unknown record numbers raise (the reference silently mislabels, ec:1889-1892)") {
     intercept[IllegalArgumentException] {
-      CdcCodec.decodeRecord(77, Array.fill[Byte](12)(0), SchemaRegistry(Map.empty))
+      CdcCodec.decodeRecord(77, Array.fill[Byte](12)(0), 0, 12, SchemaRegistry(Map.empty))
     }
   }
 

@@ -44,4 +44,14 @@ class MaterializeSuite extends AnyFunSuite {
     assert(out.count() == 2L)
     assert(!Materialize.withAny(df, col("v") > 10L)._2)
   }
+
+  test("local rebuilds a frame within its bound and raises on one above it") {
+    val sp = s
+    import sp.implicits._
+    val df = Seq(1L, 2L, 3L).toDF("id").repartition(2)
+    assert(Materialize.local(df, 3).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    val e = intercept[IllegalArgumentException](Materialize.local(df, 2))
+    assert(e.getMessage.contains("more than 2 rows"), e.getMessage)
+  }
 }
