@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's session lifecycle as a small facade — what a user of
@@ -49,17 +50,10 @@ final case class CdcSession(config: CdcConfig = CdcConfig(),
                lastCommitted: Long = 0L): DataFrame = {
     val startSeq = Restart.resolveStartSeq(seqNumber, config.useSavepoints,
       minOpenTxn, lastCommitted)
-    val reader = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("startingSeq", startSeq.toString)
-      .option("maxFilesPerTrigger", math.max(1, config.maxRecords / 100).toString)
     // Thread the enable() registrations through to the source (the
     // registry-slot write of ec:2061-2062) — without this the source only
     // knows the fixture default map.
-    if (names.nonEmpty)
-      reader.option("tabnames",
-        names.map { case (id, n) => s"$id:$n" }.mkString(","))
-    reader.load()
+    CdcChunkSource.stream(spark, chunkDir,
+      math.max(1, config.maxRecords / 100), startSeq, tabnames = names)
   }
 }

@@ -4,6 +4,7 @@ import graft.cdc._
 import graft.streaming.CdcPipeline
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -39,12 +40,11 @@ import java.util
   *    are dropped at decode, the `discard_candidate` semantic
   *    (ec:1459-1461) applied inside the source.
   *
-  * Rows come out in [[CdcPipeline.Envelope]] shape, so the downstream plan
-  * (txn assembly → merge sink) is identical for this source and the
-  * binaryFile path — a spec asserts result equality between the two.
+  * Rows come out in [[CdcPipeline.Envelope]] shape — the one ingestion
+  * path every CDC consumer (txn assembly → merge sink, the windowed and
+  * joined streams, the maintained MV/histogram/bloom) reads.
   *
-  * Usage: `spark.readStream.format("graft.sources.CdcChunkSource")
-  * .option("path", dir).load()`.
+  * Usage: [[CdcChunkSource.stream]]`(spark, dir)`.
   */
 class CdcChunkSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -55,6 +55,25 @@ class CdcChunkSource extends TableProvider {
 }
 
 object CdcChunkSource {
+
+  /** The chunk stream as envelope rows: the chunk files under `chunkDir`,
+    * at most `maxFilesPerTrigger` per micro-batch, frames below
+    * `startingSeq` discarded at decode; `tabnames` (tabid → name) are the
+    * captured tables registered beyond the fixture default. */
+  def stream(spark: SparkSession, chunkDir: String,
+      maxFilesPerTrigger: Int = 3, startingSeq: Long = 0L,
+      tabnames: Map[Int, String] = Map.empty): DataFrame = {
+    val reader = spark.readStream
+      .format("graft.sources.CdcChunkSource")
+      .option("path", chunkDir)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .option("startingSeq", startingSeq.toString)
+    if (tabnames.nonEmpty)
+      reader.option("tabnames",
+        tabnames.map { case (id, n) => s"$id:$n" }.mkString(","))
+    reader.load()
+  }
+
   /** Flat record envelope (CdcPipeline.Envelope as a row schema). */
   val EnvelopeSchema: StructType = StructType(Seq(
     StructField("recordType", StringType, nullable = false),
@@ -159,9 +178,9 @@ class CdcChunkMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int],
     val from = start.asInstanceOf[ChunkOffset].lastFile
     val to = end.asInstanceOf[ChunkOffset].lastFile
     // One partition per chunk file: decode parallelism = arrival
-    // granularity, the same split binaryFile would produce. The (from, to]
-    // name range maps committed offsets onto the SAME files on every
-    // replay, regardless of what else has arrived in the directory since.
+    // granularity. The (from, to] name range maps committed offsets onto
+    // the SAME files on every replay, regardless of what else has arrived
+    // in the directory since.
     chunks.filter { f =>
       val n = CdcChunkSource.name(f)
       n > from && n <= to
@@ -221,8 +240,7 @@ class ChunkPartitionReader(file: String, startingSeq: Long,
 
   /** Envelope projection, derived from the registered schema rather than
     * fixed positions/types — delegates to the ONE shared implementation
-    * ([[graft.streaming.CdcPipeline.envelopeCols]]) so the V2 source and
-    * the binaryFile fixture path can never drift apart; this wrapper only
+    * ([[graft.streaming.CdcPipeline.envelopeCols]]); this wrapper only
     * converts to InternalRow-friendly values (UTF8String, boxed-or-null). */
   private def envelopeCols(img: RowImage): (Any, Any, Any) = {
     val (k, v, e) = graft.streaming.CdcPipeline.envelopeCols(img, schemas)

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.BloomJoin
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming MEMBERSHIP-index maintenance — the fourth entry in the
   * streaming index family (MinHash signatures, sign sketches, IVF+PQ
@@ -46,36 +47,22 @@ object BloomStream {
   /** Maintain the membership index from the CDC chunk stream: INSERT /
     * UPDAFT row images contribute their key.
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r18 auto-tick): every K-th micro-batch runs a bounded
-    * [[graft.api.Graft.maintain]] tick over the bitmap and key logs
-    * inside foreachBatch, after the batch's writes — replay-safe
-    * because every tiered fold protects the newest committed run (the
-    * current batch's own partials, exactly what a replay overwrites);
-    * folding is union-neutral here (bitmap OR is associative, the key
-    * log reads distinct). 0 = off. */
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r18) runs
+    * [[graft.api.Graft.maintain]] over the bitmap and key logs every
+    * K-th micro-batch; folding is union-neutral here (bitmap OR is
+    * associative, the key log reads distinct). 0 = off. */
   def maintain(spark: SparkSession, chunkDir: String, checkpointDir: String,
                root: String, maintainEvery: Int = 0,
                policy: graft.api.Graft.MaintenancePolicy =
                  graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", "3")
-      .load()
-      .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
-      .select(col("key").as("k"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, root)
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(s"$root/bloom", s"$root/keys"),
-            policy = policy): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Maintainer.start(
+      CdcChunkSource.stream(spark, chunkDir)
+        .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
+        .select(col("key").as("k")),
+      checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(s"$root/bloom", s"$root/keys"), policy = policy))(
+      processBatch(_, _, root))
 
   /** OR-fold the per-batch bitmap partials into one bitmap frame (1 row).
     * Driver-side fold over #batches 8 KiB rows — bounded metadata. */
@@ -113,14 +100,8 @@ object BloomStream {
     * bloom false positive among them) must be gone after the exact
     * verify, so the output is exactly the distinct key set. */
   def sBloomIndex(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_bloom/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "index"))
+    val root = StreamFixture.root("graft_stream_bloom", d)
+    StreamFixture.reset(root, "checkpoint", "index")
     val chunkDir = new java.io.File(root, "chunks")
     CdcPipeline.recordFixtureCached(s, d, chunkDir.getAbsolutePath,
       ordered = true)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.RetrievalIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING ingest for the maintained inverted index (r13; r14 writes
   * the partition-pruned layout) — the continuous form of
@@ -60,32 +60,20 @@ object Bm25Stream {
   /** Attach continuous indexing to a streaming frame of documents
     * (`doc_id`, `text`).
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r18 — the r17 auto-tick extended to every maintained
-    * family): every K-th micro-batch runs a bounded
-    * [[graft.api.Graft.maintain]] tick over the three roots inside
-    * foreachBatch, after the batch's writes — replay-safe because
-    * every tiered fold protects the newest committed run (the current
-    * batch's own partials, exactly what a replay overwrites), and
-    * folding is union-neutral here (postings/doclens are append rows,
-    * the 1-row stats deltas are additive and re-summed at serve).
-    * 0 = off (the caller owns the schedule). */
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r18) runs
+    * [[graft.api.Graft.maintain]] over the three roots every K-th
+    * micro-batch; folding is union-neutral here (postings/doclens are
+    * append rows, the 1-row stats deltas are additive and re-summed at
+    * serve). 0 = off (the caller owns the schedule). */
   def start(docs: DataFrame, postingsDir: String, doclensDir: String,
       statsDir: String, checkpointDir: String, maintainEvery: Int = 0,
       policy: graft.api.Graft.MaintenancePolicy =
         graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, postingsDir, doclensDir, statsDir)
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(postingsDir, doclensDir, statsDir),
-            policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(docs, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(postingsDir, doclensDir, statsDir),
+        policy = policy))(
+      processBatch(_, _, postingsDir, doclensDir, statsDir))
 
   /** The served query over the accumulated partials: tb-pruned postings
     * scan + the summed stats partials — doclens partials are never read
@@ -108,27 +96,10 @@ object Bm25Stream {
     * `q_bm25_topk`'s full-recompute oracle (stream ≡ recompute is the
     * declared contract). */
   def sBm25Index(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_bm25_v2/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+    val root = StreamFixture.root("graft_stream_bm25_v2", d)
+    StreamFixture.reset(root, "checkpoint", "postings", "doclens", "stats")
     val docs = graft.Tables.spread(s, graft.Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val docDir = new java.io.File(root, "docs")
-    // Batch files are a deterministic function of the input dir — cached
-    // across runs; only the stream state resets per run.
-    Seq("checkpoint", "postings", "doclens", "stats")
-      .foreach(n => rm(new java.io.File(root, n)))
-    if (!new java.io.File(docDir, "_GRAFT_DOCS").exists()) {
-      (0 until 4).foreach { b =>
-        docs.filter(expr(s"(doc_id div 4) % 4 = $b"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(docDir, s"b$b").getAbsolutePath)
-      }
-      new java.io.File(docDir, "_GRAFT_DOCS").createNewFile(): Unit
-    }
     val postingsDir = new java.io.File(root, "postings").getAbsolutePath
     val statsDir = new java.io.File(root, "stats").getAbsolutePath
     // The AUTO-TICK gate (r18 — the s_dedup_index schedule applied to
@@ -138,9 +109,8 @@ object Bm25Stream {
     // reads state that was folded MID-stream and the oracle hash-checks
     // the maintained layout end to end.
     start(
-      s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${docDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(docs, "doc_id",
+        new java.io.File(root, "docs"), "_GRAFT_DOCS"),
       postingsDir,
       new java.io.File(root, "doclens").getAbsolutePath,
       statsDir,

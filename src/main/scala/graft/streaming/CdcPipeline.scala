@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.cdc._
+import graft.sources.CdcChunkSource
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -12,9 +13,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * savepoint semantics (ec:2228-2368) as a Structured Streaming pipeline:
   *
   * {{{
-  * readStream(binaryFile chunks) → FrameBuffer decode (in-band TABSCHEM)
+  * CdcChunkSource.stream                    (chunk files → FrameBuffer
+  *                                             decode, in-band TABSCHEM;
+  *                                             LSN offsets, admission)
   *   → flatMapGroupsWithState keyed by txid   (open-txn state, ec:581-771)
-  *   → foreachBatch idempotent merge sink     (latest-per-key + monotonic
+  *   → Maintainer.start idempotent merge sink (latest-per-key + monotonic
   *                                             LSN guard, ec:735-771)
   * }}}
   *
@@ -36,7 +39,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    (checkpoint recovery makes the offset decision in Spark; the pure
   *    function is the unit-testable contract).
   *
-  * Scale: chunks decode in parallel (one task per file split), transaction
+  * Scale: chunks decode in parallel (one task per chunk file), transaction
   * assembly shuffles once on txid into the state store, and the sink's
   * latest-per-key merge is one window over (key) — the same shape as batch
   * `q_latest_per_key`. At 100 TB the chunk directory becomes a real queue
@@ -49,7 +52,6 @@ object CdcPipeline {
   val StreamDdl = "k bigint, v float, etype varchar(32)"
   val StreamTabid = 1
   val StreamTabname = "cdc_stream"
-  private def emptyRegistry = SchemaRegistry(Map(StreamTabid -> StreamTabname))
   private def streamSchema = DdlParser.parse(StreamTabid, StreamTabname, StreamDdl)
 
   /** Flat record envelope for the streaming plan (flat nullable fields beat
@@ -203,14 +205,14 @@ object CdcPipeline {
 
   // -------------------------------------------------------------- pipeline
 
-  /** Envelope projection, derived from the chunk's in-band TABSCHEM
-    * registry rather than fixed positions/types (mirrors the V2 source,
-    * [[graft.sources.CdcChunkSource]]): `key` = the table's first integral
-    * column (widened to long), `v` = its first fractional column (as
-    * double), `etype` = its first string column — None when the table has
-    * no such column. Decoded host values are coerced by their actual
-    * runtime type, so a captured table of ANY shape streams through the
-    * binaryFile path without ClassCastException. */
+  /** Envelope projection — the one the V2 source's reader applies
+    * ([[graft.sources.ChunkPartitionReader]]) — derived from the chunk's
+    * in-band TABSCHEM registry rather than fixed positions/types: `key` =
+    * the table's first integral column (widened to long), `v` = its first
+    * fractional column (as double), `etype` = its first string column —
+    * None when the table has no such column. Decoded host values are
+    * coerced by their actual runtime type, so a captured table of ANY
+    * shape streams through without ClassCastException. */
   private[graft] def envelopeCols(img: RowImage, schemas: SchemaRegistry)
       : (Option[Long], Option[Double], Option[String]) = {
     import org.apache.spark.sql.types._
@@ -239,25 +241,6 @@ object CdcPipeline {
       case other => other.toString
     }
     (k, v, e)
-  }
-
-  /** Decode a chunk's bytes into envelope records (the frame walk of
-    * fetchone, ec:2246-2254, via [[FrameBuffer]]; TABSCHEM consumed in-band,
-    * control records dropped after use). */
-  private[streaming] def decodeChunk(bytes: Array[Byte]): Iterator[Envelope] = {
-    val fb = new FrameBuffer(emptyRegistry)
-    val recs = fb.append(bytes)
-    require(fb.pendingBytes == 0, "fixture chunk ends mid-frame")
-    recs.iterator.collect {
-      case r: RowImage =>
-        val (k, v, e) = envelopeCols(r, fb.registry)
-        Envelope(r.recordType, r.seqNumber, r.transactionId, k, v, e)
-      case r: BeginTx => Envelope(r.recordType, r.seqNumber, r.transactionId, None, None, None)
-      case r: CommitTx => Envelope(r.recordType, r.seqNumber, r.transactionId, None, None, None)
-      case r: RollbackTx => Envelope(r.recordType, r.seqNumber, r.transactionId, None, None, None)
-      case r: DiscardTx => Envelope(r.recordType, r.seqNumber, r.transactionId, None, None, None)
-      case r: TruncateTab => Envelope(r.recordType, r.seqNumber, r.transactionId, None, None, None)
-    }
   }
 
   /** Open-transaction assembly (the savepoint hooks of ec:2259-2319 as
@@ -615,29 +598,8 @@ object CdcPipeline {
       .groupByKey(_.txid)
       .flatMapGroupsWithState[TxnBuf, Committed](
         OutputMode.Append, GroupStateTimeout.NoTimeout)(assemble)
-    committed.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((batch: Dataset[Committed], _: Long) =>
-        mergeLatest(batch.toDF(), outDir))
-      .start()
-  }
-
-  /** Build and start the streaming query (binaryFile source path: whole
-    * chunk files decoded in a flatMap); caller awaits termination. */
-  def start(spark: SparkSession, chunkDir: String, checkpointDir: String,
-            outDir: String, maxFilesPerTrigger: Option[Int] = Some(3)) = {
-    import spark.implicits._
-    val reader = spark.readStream.format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
-      .option("pathGlobFilter", "*.bin")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val envelopes = reader.load(chunkDir)
-      .select(col("content")).as[Array[Byte]]
-      .flatMap(decodeChunk _)
-    runPipeline(envelopes, checkpointDir, outDir)
+    Maintainer.start(committed, checkpointDir)((batch, _) =>
+      mergeLatest(batch.toDF(), outDir))
   }
 
   /** The `informixcdc_lsttxn` savepoint analog: the highest committed LSN
@@ -670,19 +632,18 @@ object CdcPipeline {
     startV2(spark, chunkDir, freshCheckpointDir, outDir, startingSeq = startSeq)
   }
 
-  /** Same pipeline over the DataSource V2 source
+  /** Build and start the streaming query over the DataSource V2 source
     * ([[graft.sources.CdcChunkSource]]): LSN-aware offsets, admission
-    * control, and source-side discard of pre-`startingSeq` history. */
+    * control (`None` admits every pending chunk per batch), and
+    * source-side discard of pre-`startingSeq` history; caller awaits
+    * termination. */
   def startV2(spark: SparkSession, chunkDir: String, checkpointDir: String,
               outDir: String, maxFilesPerTrigger: Option[Int] = Some(3),
               startingSeq: Long = 0L) = {
     import spark.implicits._
-    val reader = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("startingSeq", startingSeq.toString)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    runPipeline(reader.load().as[Envelope], checkpointDir, outDir)
+    val envelopes = CdcChunkSource.stream(spark, chunkDir,
+      maxFilesPerTrigger.getOrElse(Int.MaxValue), startingSeq)
+    runPipeline(envelopes.as[Envelope], checkpointDir, outDir)
   }
 
   /** Streaming windowed aggregation with a watermark over the CDC stream
@@ -701,11 +662,7 @@ object CdcPipeline {
     * not the stream. */
   def commitWindows(spark: SparkSession, chunkDir: String,
                     checkpointDir: String, outDir: String) = {
-    val env = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", "3")
-      .load()
+    val env = CdcChunkSource.stream(spark, chunkDir)
     // Conditional aggregates instead of a pre-filter: a `filter(recordType
     // = COMMTX)` above the watermark gets PUSHED BELOW EventTimeWatermark
     // by Catalyst (the predicate doesn't touch the event-time column), and
@@ -813,11 +770,7 @@ object CdcPipeline {
                  checkpointDir: String, outDir: String,
                  maxFilesPerTrigger: Int = 3,
                  maxTxnSpanMicros: Long = 100L) = {
-    def env = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
+    def env = CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
     val images = env
       .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
       .select(col("seq"), col("txid"), col("key").as("k"),
@@ -849,14 +802,8 @@ object CdcPipeline {
     * fixture and return the joined rows. The DuckDB oracle recomputes the
     * join relationally from `events` (committed transactions only). */
   def sStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_join/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "joined"))
+    val root = StreamFixture.root("graft_stream_join", d)
+    StreamFixture.reset(root, "checkpoint", "joined")
     val chunkDir = new java.io.File(root, "chunks")
     recordFixtureCached(s, d, chunkDir.getAbsolutePath, ordered = true)
     val ck = new java.io.File(root, "checkpoint").getAbsolutePath
@@ -882,11 +829,7 @@ object CdcPipeline {
   def changelogDedup(spark: SparkSession, chunkDir: String,
                      checkpointDir: String, outDir: String,
                      maxFilesPerTrigger: Int = 3) = {
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
+    CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
       .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
       .select(col("seq"), col("txid"), col("key").as("k"), col("v"),
         col("etype"), timestamp_micros(col("seq")).as("ts"))
@@ -924,11 +867,7 @@ object CdcPipeline {
   def sessionWindows(spark: SparkSession, chunkDir: String,
                      checkpointDir: String, outDir: String) = {
     val isImage = col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT")
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", "3")
-      .load()
+    CdcChunkSource.stream(spark, chunkDir)
       .select(col("seq"),
         when(isImage, col("key")).as("k"),
         when(isImage, lit(1L)).otherwise(lit(0L)).as("is_img"),
@@ -952,14 +891,8 @@ object CdcPipeline {
 
   /** Driver-checked: [[sessionWindows]] over the ordered fixture. */
   def sSessionWindow(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_sess/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "sessions"))
+    val root = StreamFixture.root("graft_stream_sess", d)
+    StreamFixture.reset(root, "checkpoint", "sessions")
     val chunkDir = new java.io.File(root, "chunks")
     recordFixtureCached(s, d, chunkDir.getAbsolutePath, ordered = true)
     val ck = new java.io.File(root, "checkpoint").getAbsolutePath
@@ -976,14 +909,8 @@ object CdcPipeline {
     * deduped rows. The oracle is the duplicate-free mapping from
     * `events`, so any double emission breaks the row count AND the hash. */
   def sChangelogDedup(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_dedup/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "deduped"))
+    val root = StreamFixture.root("graft_stream_dedup", d)
+    StreamFixture.reset(root, "checkpoint", "deduped")
     val chunkDir = new java.io.File(root, "chunks")
     // r8 advice #4: the replay copy is keyed to the SAME version marker
     // as the recording — a re-recorded fixture (marker bump) re-derives
@@ -1011,14 +938,8 @@ object CdcPipeline {
     * fixture (the real transaction-log shape — the monotonic-watermark
     * precondition) and return the emitted windows. */
   def sCommitWindows(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_win/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "windows"))
+    val root = StreamFixture.root("graft_stream_win", d)
+    StreamFixture.reset(root, "checkpoint", "windows")
     val chunkDir = new java.io.File(root, "chunks")
     recordFixtureCached(s, d, chunkDir.getAbsolutePath, ordered = true)
     val ck = new java.io.File(root, "checkpoint").getAbsolutePath
@@ -1035,21 +956,15 @@ object CdcPipeline {
     * `events` (the fixture mapping is deterministic), so the whole
     * decode → txn-state → merge path is hash-checked. */
   def sCdcPipeline(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(s"/tmp/graft_stream/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
+    val root = StreamFixture.root("graft_stream", d)
     val chunkDir = new java.io.File(root, "chunks")
     val checkpoint = new java.io.File(root, "checkpoint")
     val outDir = new java.io.File(root, "materialized")
-    // Fresh deterministic run: clear all STATE; the recorded chunk fixture
-    // is content-addressed by its inputs and reused.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(checkpoint)
-    rm(outDir) // staging/backup live INSIDE the table root; one rm covers all
+    // Fresh deterministic run: clear all STATE (staging/backup live INSIDE
+    // the table root); the recorded chunk fixture is content-addressed by
+    // its inputs and reused.
+    StreamFixture.reset(root, "checkpoint", "materialized")
     recordFixtureCached(s, d, chunkDir.getAbsolutePath)
-    // The V2 source path (custom DataSource V2 with offset log + admission
-    // control); the binaryFile path is spec-checked equal to it.
     withStatePartitions(s) {
       startV2(s, chunkDir.getAbsolutePath, checkpoint.getAbsolutePath,
         outDir.getAbsolutePath).awaitTermination()

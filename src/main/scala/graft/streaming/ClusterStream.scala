@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{LlmQueries, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING text-dedup CLUSTER LABELS (r14) — the composition of the
   * two streaming maintenance verbs the library already owns: per
@@ -144,19 +144,12 @@ object ClusterStream {
       maintainEvery: Int = 0,
       policy: graft.api.Graft.MaintenancePolicy =
         graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, textCol, indexDir, pairsDir,
-          labelsDir, threshold)
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir, pairsDir),
-            labelDirs = Seq(labelsDir), policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(docs, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(indexDir, pairsDir),
+        labelDirs = Seq(labelsDir), policy = policy))(
+      processBatch(_, _, idCol, textCol, indexDir, pairsDir, labelsDir,
+        threshold))
 
   /** The current labels, shaped like `q_dup_clusters`'s output:
     * (doc_id, component, cluster_size, keep) — [[LabelLog.serve]]'s
@@ -229,37 +222,18 @@ object ClusterStream {
     * fixture path [[sClusterLabels]] uses, exposed so
     * [[PhaseLabelGate]] can name it as its [[PhaseClock]] scope. */
   private[streaming] def gateLabelsDir(d: String): String =
-    new java.io.File(new java.io.File(
-      s"/tmp/graft_stream_clusters/${d.replaceAll("[^A-Za-z0-9.]", "_")}"),
+    new java.io.File(StreamFixture.root("graft_stream_clusters", d),
       "labels").getAbsolutePath
 
   def sClusterLabels(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_clusters/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+    val root = StreamFixture.root("graft_stream_clusters", d)
+    StreamFixture.reset(root, "checkpoint", "index", "pairs", "labels")
     val docs = graft.Tables.spread(s, graft.Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val docDir = new java.io.File(root, "docs")
-    // Batch files are a deterministic function of the input dir — cached
-    // across runs; only the stream state resets per run.
-    Seq("checkpoint", "index", "pairs", "labels")
-      .foreach(n => rm(new java.io.File(root, n)))
-    if (!new java.io.File(docDir, "_GRAFT_DOCS").exists()) {
-      (0 until 4).foreach { b =>
-        docs.filter(expr(s"(doc_id div 4) % 4 = $b"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(docDir, s"b$b").getAbsolutePath)
-      }
-      new java.io.File(docDir, "_GRAFT_DOCS").createNewFile(): Unit
-    }
     val labelsDir = new java.io.File(root, "labels").getAbsolutePath
     start(
-      s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${docDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(docs, "doc_id",
+        new java.io.File(root, "docs"), "_GRAFT_DOCS"),
       "doc_id", "text",
       new java.io.File(root, "index").getAbsolutePath,
       new java.io.File(root, "pairs").getAbsolutePath,

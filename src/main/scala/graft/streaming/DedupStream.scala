@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{LlmQueries, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous near-duplicate maintenance: the missing end-to-end story the
   * round-6 verdict named (#2) — the persisted signature index
@@ -352,34 +352,24 @@ object DedupStream {
   /** Attach continuous dedup to a streaming Dataset of documents:
     * `docs` must be a streaming frame carrying `idCol` and `textCol`.
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r17 auto-tick): every K-th micro-batch runs a
-    * [[graft.api.Graft.maintain]] tick over the index and pair-log
-    * roots inside foreachBatch, after the batch's state writes —
-    * replay-safe because every tiered fold protects the newest
-    * committed run (the current batch's own partial, the one a replay
-    * overwrites). 0 = off. */
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r17) runs
+    * [[graft.api.Graft.maintain]] over the index and pair-log roots
+    * every K-th micro-batch. 0 = off. */
   def start(docs: DataFrame, idCol: String, textCol: String,
             indexDir: String, pairsDir: String, checkpointDir: String,
             threshold: Double = 0.7, maintainEvery: Int = 0,
             policy: graft.api.Graft.MaintenancePolicy =
               graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, textCol, indexDir, pairsDir, threshold): Unit
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0) {
-          val t0 = System.nanoTime()
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir, pairsDir), policy = policy): Unit
-          if (sys.env.contains("GRAFT_TRACE"))
-            System.err.println(f"[dedup_stream] batch $id maintain " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-      }
-      .start()
+    Maintainer.start(docs, checkpointDir, maintainEvery,
+      tick = { sp =>
+        val t0 = System.nanoTime()
+        graft.api.Graft.maintain(sp,
+          indexRoots = Seq(indexDir, pairsDir), policy = policy): Unit
+        if (sys.env.contains("GRAFT_TRACE"))
+          System.err.println(f"[dedup_stream] maintain " +
+            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+      })(
+      processBatch(_, _, idCol, textCol, indexDir, pairsDir, threshold))
 
   /** Driver-checked (`s_dedup_index`, r15 — the curation stream was the
     * one maintainer without an `s_*` gate): split the corpus into 4
@@ -401,25 +391,14 @@ object DedupStream {
     StreamFixture.reset(root, "checkpoint", "index", "pairs")
     val docs = graft.Tables.spread(s, graft.Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val docDir = new java.io.File(root, "docs")
-    // Batch files are a deterministic function of the input dir — cached
-    // across runs; only the stream state resets per run.
-    StreamFixture.cached(docDir, "_GRAFT_DOCS") {
-      (0 until 4).foreach { b =>
-        docs.filter(expr(s"(doc_id div 4) % 4 = $b"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(docDir, s"b$b").getAbsolutePath)
-      }
-    }
     // The AUTO-TICK gate (r17): the maintenance schedule is declared
     // once on the builder — every micro-batch runs a bounded
     // maintain() tick (fanIn=2 so folds actually fire at 4 batches),
     // so later batches probe ACROSS folded runs mid-stream and the
     // oracle hash-checks that the maintained layout serves identically.
     start(
-      s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${docDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(docs, "doc_id",
+        new java.io.File(root, "docs"), "_GRAFT_DOCS"),
       "doc_id", "text",
       new java.io.File(root, "index").getAbsolutePath,
       new java.io.File(root, "pairs").getAbsolutePath,

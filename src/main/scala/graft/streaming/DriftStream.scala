@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.ScaleOps
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming drift monitoring (`s_drift`): the per-(segment, bucket) value
   * HISTOGRAM kept current by the change stream, with the PSI score read
@@ -42,26 +43,17 @@ object DriftStream {
     * [[MvStream.maintain]] filter), keyed by its grid cell. */
   def maintain(spark: SparkSession, chunkDir: String, checkpointDir: String,
       mvDir: String, maxFilesPerTrigger: Int = 3): StreamingQuery =
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
-      .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
-      .select(
-        concat(col("etype"), lit(":"),
-          expr("least(cast(9 as bigint), cast(round(cast(v AS double) * 100) as bigint) div 5000)"))
-          .as("k"),
-        lit(1L).as("n_rows"),
-        lit(null).cast("decimal(18,2)").as("sum_dec"),
-        col("seq").as("last_seq"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        MvStream.processBatch(df, id, mvDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Maintainer.start(
+      CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
+        .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
+        .select(
+          concat(col("etype"), lit(":"),
+            expr("least(cast(9 as bigint), cast(round(cast(v AS double) * 100) as bigint) div 5000)"))
+            .as("k"),
+          lit(1L).as("n_rows"),
+          lit(null).cast("decimal(18,2)").as("sum_dec"),
+          col("seq").as("last_seq")),
+      checkpointDir)(MvStream.processBatch(_, _, mvDir))
 
   /** Driver-checked: maintain the histogram over the recorded fixture
     * stream, then read the monitor. Oracle = the batch `q_drift_psi`

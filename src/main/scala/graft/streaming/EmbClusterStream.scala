@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.LlmQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING EMBEDDING-cluster labels (r14) — [[ClusterStream]]'s
   * continuous-label composition applied to the sign-sketch index: per
@@ -124,20 +124,13 @@ object EmbClusterStream {
       maintainEvery: Int = 0,
       policy: graft.api.Graft.MaintenancePolicy =
         graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, vecCol, indexDir, pairsDir,
-          labelsDir, threshold)
-        // the ClusterStream.start auto-tick (r17), same replay guards
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir, pairsDir),
-            labelDirs = Seq(labelsDir), policy = policy): Unit
-      }
-      .start()
+    // the ClusterStream.start auto-tick (r17), same replay guards
+    Maintainer.start(vectors, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(indexDir, pairsDir),
+        labelDirs = Seq(labelsDir), policy = policy))(
+      processBatch(_, _, idCol, vecCol, indexDir, pairsDir, labelsDir,
+        threshold))
 
   /** The current labels, shaped like `q_emb_clusters`'s output:
     * (vec_id, component, cluster_size, keep) — [[LabelLog.serve]] under
@@ -178,34 +171,16 @@ object EmbClusterStream {
     * shaped as the cluster table — hash-checked against
     * `q_emb_clusters`'s full-recompute oracle (one string for both). */
   def sEmbClusterLabels(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_emb_clusters/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+    val root = StreamFixture.root("graft_stream_emb_clusters", d)
+    StreamFixture.reset(root, "checkpoint", "index", "pairs", "labels")
     val vecs = graft.Tables.spread(s, graft.Tables.embeddings(s, d))
       .select(col("vec_id"), col("embedding"))
-    val vecDir = new java.io.File(root, "vecs")
-    // Batch files are a deterministic function of the input dir — cached
-    // across runs; only the stream state resets per run.
-    Seq("checkpoint", "index", "pairs", "labels")
-      .foreach(n => rm(new java.io.File(root, n)))
-    if (!new java.io.File(vecDir, "_GRAFT_VECS").exists()) {
-      (0 until 4).foreach { b =>
-        vecs.filter(expr(s"(vec_id div 4) % 4 = $b"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(vecDir, s"b$b").getAbsolutePath)
-      }
-      new java.io.File(vecDir, "_GRAFT_VECS").createNewFile(): Unit
-    }
     val indexDir = new java.io.File(root, "index").getAbsolutePath
     val labelsDir = new java.io.File(root, "labels").getAbsolutePath
     createIndex(vecs, "vec_id", "embedding", indexDir, nPlanes = 6)
     start(
-      s.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${vecDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(vecs, "vec_id",
+        new java.io.File(root, "vecs"), "_GRAFT_VECS"),
       "vec_id", "embedding",
       indexDir,
       new java.io.File(root, "pairs").getAbsolutePath,

@@ -4,7 +4,7 @@ import graft.operators.{LlmQueries, Materialize}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous EMBEDDING near-duplicate maintenance — [[DedupStream]]'s
   * batch→index→probe pattern (round-7 verdict #6) applied to the
@@ -280,30 +280,19 @@ object EmbDedupStream {
     * vectors: `vectors` must be a streaming frame carrying `idCol` and
     * an `Array[Float]` `vecCol`.
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r18 auto-tick): every K-th micro-batch runs a bounded
-    * [[graft.api.Graft.maintain]] tick over the `sb=` sketch index and
-    * the pair log inside foreachBatch, after the batch's writes —
-    * replay-safe because every tiered fold protects the newest
-    * committed run (the current batch's own partials, exactly what a
-    * replay overwrites; the `_graft_planes` vocabulary beside the runs
-    * is untouched by folds). 0 = off. */
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r18) runs
+    * [[graft.api.Graft.maintain]] over the `sb=` sketch index and the
+    * pair log every K-th micro-batch (folds never touch the
+    * `_graft_planes` vocabulary beside the runs). 0 = off. */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             indexDir: String, pairsDir: String, checkpointDir: String,
             threshold: Double = 0.99, nPlanes: Int = 16,
             maintainEvery: Int = 0,
             policy: graft.api.Graft.MaintenancePolicy =
               graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, vecCol, indexDir, pairsDir, threshold,
-          nPlanes): Unit
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir, pairsDir), policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(vectors, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(indexDir, pairsDir), policy = policy))(
+      processBatch(_, _, idCol, vecCol, indexDir, pairsDir, threshold,
+        nPlanes))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -37,11 +38,7 @@ object EnrichStream {
   def enrich(spark: SparkSession, chunkDir: String, customer: DataFrame,
              checkpointDir: String, outDir: String,
              maxFilesPerTrigger: Int = 3) = {
-    val env = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
+    val env = CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
     val dim = broadcast(
       customer.select(col("c_custkey"), col("c_name"), col("c_mktsegment")))
     env
@@ -65,14 +62,8 @@ object EnrichStream {
     * `seq = event_id·4 + 2` (purchases as UPDAFT, the rest as INSERT),
     * joined to `customer` on `user_id = c_custkey`. */
   def sEnrich(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_enrich/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "enriched"))
+    val root = StreamFixture.root("graft_enrich", d)
+    StreamFixture.reset(root, "checkpoint", "enriched")
     val chunkDir = new java.io.File(root, "chunks")
     CdcPipeline.recordFixtureCached(s, d, chunkDir.getAbsolutePath,
       ordered = true)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.FuzzyJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING entity-resolution maintenance (r13) — the continuous form of
   * `q_er_increment`: mention batches arrive as a stream, and each
@@ -156,6 +156,16 @@ object ErStream {
     * (`mention_id`, `mname`) against a static catalog
     * (`entity_id`, `ename`).
     *
+    * The catalog frame must not change during one stream run: it is
+    * fixed for the run's lifetime, and every batch after the run's
+    * first reads its predecessor snapshot directly as the seed table,
+    * which is correct only while the catalog's id set is the one the
+    * run's first batch seeded ([[processBatch]]'s `seededThisRun`).
+    * A catalog that grows between runs is fine — each run's first
+    * batch re-seeds from it. Pass a materialized frame
+    * ([[graft.operators.Materialize]]) so every batch reads the same
+    * rows.
+    *
     * `maintainEvery` > 0 declares the maintenance schedule once on the
     * builder (r18 auto-tick): every K-th micro-batch runs a bounded
     * [[graft.api.Graft.maintain]] tick — the link log tiered-folds and
@@ -176,19 +186,13 @@ object ErStream {
     // guard (see processBatch): later batches of the run read their
     // predecessor snapshot as the seed table directly.
     val seededThisRun = new java.util.concurrent.atomic.AtomicBoolean(false)
-    mentions.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, catalog, pairsDir, labelsDir,
-          seededThisRun.getAndSet(true))
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(pairsDir),
-            snapshotRoots = Seq(labelsDir), policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(mentions, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(pairsDir),
+        snapshotRoots = Seq(labelsDir), policy = policy)) { (b, id) =>
+      processBatch(b, id, catalog, pairsDir, labelsDir,
+        seededThisRun.getAndSet(true))
+    }
   }
 
   /** Current resolved assignments: the latest label snapshot + the full
@@ -211,44 +215,24 @@ object ErStream {
     * `q_er_increment` (stream ≡ increment ≡ recompute, one oracle
     * string for all three). */
   def sErIncrement(s: SparkSession, d: String): DataFrame = {
-    def trace(tag: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime(); body
+    def trace[T](tag: String)(body: => T): T = {
+      val t0 = System.nanoTime(); val r = body
       if (sys.env.contains("GRAFT_TRACE"))
         System.err.println(f"[er_stream] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      r
     }
-    val root = new java.io.File(
-      s"/tmp/graft_stream_er/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+    val root = StreamFixture.root("graft_stream_er", d)
+    StreamFixture.reset(root, "checkpoint", "pairs", "labels")
     val (catalog0, mentions) = FuzzyJoin.erFixture(s, d)
     // Materialized once, served to all micro-batches — the catalog
     // groupBy must not re-run per batch.
     val catalog = graft.operators.Materialize(catalog0)
-    val menDir = new java.io.File(root, "mentions")
-    // The mention batch files are a deterministic function of the input
-    // dir — cache them across runs (the recordFixtureCached discipline);
-    // only the stream state (checkpoint/pairs/labels) resets per run.
-    Seq("checkpoint", "pairs", "labels")
-      .foreach(n => rm(new java.io.File(root, n)))
-    if (!new java.io.File(menDir, "_GRAFT_MENTIONS").exists()) {
-      trace("fixture") {
-        (0 until 4).foreach { b =>
-          mentions.filter(expr(s"(mention_id div 4) % 4 = $b"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(new java.io.File(menDir, s"b$b").getAbsolutePath)
-        }
-        new java.io.File(menDir, "_GRAFT_MENTIONS").createNewFile(): Unit
-      }
+    val batches = trace("fixture") {
+      StreamFixture.fourBatches(mentions, "mention_id",
+        new java.io.File(root, "mentions"), "_GRAFT_MENTIONS")
     }
     trace("stream") {
-      start(
-        s.readStream
-          .schema(mentions.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"${menDir.getAbsolutePath}/*"),
-        catalog,
+      start(batches, catalog,
         new java.io.File(root, "pairs").getAbsolutePath,
         new java.io.File(root, "labels").getAbsolutePath,
         new java.io.File(root, "checkpoint").getAbsolutePath)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
@@ -35,12 +36,7 @@ object GapStream {
   def monitor(spark: SparkSession, chunkDir: String, checkpointDir: String,
               outDir: String, maxFilesPerTrigger: Int = 3) = {
     import spark.implicits._
-    val env = spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
-    val ids = env
+    val ids = CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
       .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
       .select(col("etype"), expr("seq div 4").as("id"))
       .as[(String, Long)]
@@ -71,14 +67,8 @@ object GapStream {
   /** The streamed gap rows, totally ordered — shared by the driver query
     * and the suite's batch-parity check. */
   private[streaming] def streamedGaps(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_gaps/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "gaps"))
+    val root = StreamFixture.root("graft_gaps", d)
+    StreamFixture.reset(root, "checkpoint", "gaps")
     val chunkDir = new java.io.File(root, "chunks")
     CdcPipeline.recordFixtureCached(s, d, chunkDir.getAbsolutePath,
       ordered = true)

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous MULTIMODAL near-duplicate maintenance (r14 — extends the
   * index-maintenance matrix to the media family, which until now had
@@ -240,32 +240,21 @@ object MediaDedupStream {
   /** Attach continuous media dedup to a streaming frame of
     * (`idCol`, binary `payloadCol`) rows.
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r18 auto-tick): every K-th micro-batch runs a bounded
-    * [[graft.api.Graft.maintain]] tick over the `mb=` fingerprint
-    * index, the pair log, and the quarantine log inside foreachBatch,
-    * after the batch's writes — replay-safe because every tiered fold
-    * protects the newest committed run (the current batch's own
-    * partials, exactly what a replay overwrites). 0 = off. */
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r18) runs
+    * [[graft.api.Graft.maintain]] over the `mb=` fingerprint index, the
+    * pair log, and the quarantine log every K-th micro-batch. 0 = off. */
   def start(media: DataFrame, idCol: String, payloadCol: String,
       kernel: Array[Byte] => Either[String, Long], indexDir: String,
       pairsDir: String, quarantineDir: String, checkpointDir: String,
       maxHamming: Int = 2, maintainEvery: Int = 0,
       policy: graft.api.Graft.MaintenancePolicy =
         graft.api.Graft.MaintenancePolicy()): StreamingQuery =
-    media.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, payloadCol, kernel, indexDir,
-          pairsDir, quarantineDir, maxHamming)
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir, pairsDir, quarantineDir),
-            policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(media, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(indexDir, pairsDir, quarantineDir),
+        policy = policy))(
+      processBatch(_, _, idCol, payloadCol, kernel, indexDir, pairsDir,
+        quarantineDir, maxHamming))
 
   /** Driver-checked (`s_media_index`): split the corpus's synthetic PGM
     * payloads into 4 deterministic micro-batches of (doc_id, payload
@@ -279,32 +268,16 @@ object MediaDedupStream {
   def sMediaIndex(s: SparkSession, d: String): DataFrame = {
     import graft.multimodal.MultimodalOps
     import s.implicits._
-    val root = new java.io.File(
-      s"/tmp/graft_stream_media/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    Seq("checkpoint", "index", "pairs", "quarantine")
-      .foreach(n => rm(new java.io.File(root, n)))
-    val mediaDir = new java.io.File(root, "media")
-    if (!new java.io.File(mediaDir, "_GRAFT_MEDIA").exists()) {
-      val ids = graft.Tables.spread(s, graft.Tables.documents(s, d))
-        .select(col("doc_id")).as[Long]
-      (0 until 4).foreach { b =>
-        ids.filter(expr(s"(doc_id div 4) % 4 = $b"))
-          .mapPartitions(_.map(id => (id, MultimodalOps.syntheticNoisePgm(id))))
-          .toDF("doc_id", "payload")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(mediaDir, s"b$b").getAbsolutePath)
-      }
-      new java.io.File(mediaDir, "_GRAFT_MEDIA").createNewFile(): Unit
-    }
-    val schema = "doc_id BIGINT, payload BINARY"
+    val root = StreamFixture.root("graft_stream_media", d)
+    StreamFixture.reset(root, "checkpoint", "index", "pairs", "quarantine")
+    // (doc_id, payload) rows: each doc's PGM is a pure function of its id
+    val media = graft.Tables.spread(s, graft.Tables.documents(s, d))
+      .select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(id => (id, MultimodalOps.syntheticNoisePgm(id))))
+      .toDF("doc_id", "payload")
     start(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${mediaDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(media, "doc_id",
+        new java.io.File(root, "media"), "_GRAFT_MEDIA"),
       "doc_id", "payload", MultimodalOps.dHashPgmE,
       new java.io.File(root, "index").getAbsolutePath,
       new java.io.File(root, "pairs").getAbsolutePath,

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import graft.operators.CdcQueries
+import graft.sources.CdcChunkSource
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming incremental materialized-view maintenance (`s_mv_delta`): the
   * streaming twin of `q_mv_delta` — a per-key count/sum/high-water
@@ -150,23 +151,14 @@ object MvStream {
     * rows, then [[processBatch]] merges each micro-batch. */
   def maintain(spark: SparkSession, chunkDir: String, checkpointDir: String,
       mvDir: String, maxFilesPerTrigger: Int = 3): StreamingQuery =
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load()
-      .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
-      .select(col("key").as("k"),
-        lit(1L).as("n_rows"),
-        col("v").cast("decimal(18,2)").as("sum_dec"),
-        col("seq").as("last_seq"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        processBatch(df, id, mvDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Maintainer.start(
+      CdcChunkSource.stream(spark, chunkDir, maxFilesPerTrigger)
+        .filter(col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT"))
+        .select(col("key").as("k"),
+          lit(1L).as("n_rows"),
+          col("v").cast("decimal(18,2)").as("sum_dec"),
+          col("seq").as("last_seq")),
+      checkpointDir)(processBatch(_, _, mvDir))
 
   /** Driver-checked: maintain the MV over the recorded fixture stream,
     * then read it. The oracle is the full recompute over `events` — the

@@ -1,14 +1,17 @@
 package graft.streaming
 
 import java.io.File
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
 
-/** Shared temp-root helper for the driver-gated streaming fixtures
-  * (`s_*` entries): every gate keys its scratch state off the same
-  * `/tmp/<kind>/<sanitized sf dir>` layout, resets the STREAM state
-  * (checkpoint + maintained stores) per run, and caches the
-  * deterministic batch-file fixture across runs behind a marker file.
-  * One implementation instead of a per-gate copy of the rm/sanitize
-  * boilerplate (r14 verdict #6).
+/** Shared fixture helpers for the driver-gated streaming entries
+  * (`s_*`): every gate keys its scratch state off the same
+  * `/tmp/<kind>/<sanitized sf dir>` layout ([[root]]), resets the STREAM
+  * state (checkpoint + maintained stores) per run ([[reset]]), and
+  * caches its deterministic input across runs behind a marker file
+  * ([[cached]]). The CDC gates' input is the recorded chunk fixture
+  * ([[CdcPipeline.recordFixtureCached]]); the corpus gates' input is
+  * the 4-batch split streamed one file per trigger ([[fourBatches]]).
   *
   * Deliberately `java.io.File`: these are the driver-gated FIXTURE
   * entry points, hardcoded to local /tmp by design (the r13 verdict's
@@ -40,4 +43,24 @@ private[streaming] object StreamFixture {
       build
       new File(dir, marker).createNewFile(): Unit
     }
+
+  /** The corpus gates' micro-batch stream over `frame`: split once
+    * (behind `marker`) into `dir/b0` … `dir/b3` by `(idCol div 4) % 4`,
+    * one parquet file each, then stream those dirs with
+    * `maxFilesPerTrigger=1` — batch k holds the rows whose
+    * `(idCol div 4) % 4` is k, in that order (the batch assignment the
+    * curation oracle of `s_dedup_index` unrolls). */
+  def fourBatches(frame: DataFrame, idCol: String, dir: File,
+      marker: String): DataFrame = {
+    cached(dir, marker) {
+      (0 until 4).foreach { b =>
+        frame.filter(expr(s"($idCol div 4) % 4 = $b"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new File(dir, s"b$b").getAbsolutePath)
+      }
+    }
+    frame.sparkSession.readStream.schema(frame.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"${dir.getAbsolutePath}/*")
+  }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.CdcChunkSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,11 +33,7 @@ object TrendStream {
   def trendingCounts(spark: SparkSession, chunkDir: String,
                      checkpointDir: String, outDir: String): StreamingQuery = {
     val isImage = col("recordType").isin("CDC_REC_INSERT", "CDC_REC_UPDAFT")
-    spark.readStream
-      .format("graft.sources.CdcChunkSource")
-      .option("path", chunkDir)
-      .option("maxFilesPerTrigger", "3")
-      .load()
+    CdcChunkSource.stream(spark, chunkDir)
       .select(when(isImage, col("key")).as("k"),
         when(isImage, lit(1L)).otherwise(lit(0L)).as("is_img"),
         timestamp_micros(col("seq")).as("ts"))
@@ -67,14 +64,8 @@ object TrendStream {
   /** Driver-checked (`s_topk`): maintain the windowed counts from the
     * ordered fixture, then serve top-3 per window. */
   def sTopk(s: SparkSession, d: String): DataFrame = {
-    val root = new java.io.File(
-      s"/tmp/graft_stream_trend/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root, "checkpoint"))
-    rm(new java.io.File(root, "counts"))
+    val root = StreamFixture.root("graft_stream_trend", d)
+    StreamFixture.reset(root, "checkpoint", "counts")
     val chunkDir = new java.io.File(root, "chunks")
     CdcPipeline.recordFixtureCached(s, d, chunkDir.getAbsolutePath,
       ordered = true)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous maintenance of the PERSISTED ANN index — the
   * [[DedupStream]]/[[EmbDedupStream]] batch→state→append pattern applied
@@ -196,14 +196,10 @@ object VectorIndexStream {
   /** Attach continuous index maintenance to a streaming Dataset of
     * vectors carrying `idCol` and an `Array[Float]` `vecCol`.
     *
-    * `maintainEvery` > 0 declares the maintenance schedule once on the
-    * builder (r18 auto-tick): every K-th micro-batch runs a bounded
-    * [[graft.api.Graft.maintain]] tick over the `cluster=`-partitioned
-    * posting runs inside foreachBatch, after the batch's append —
-    * replay-safe because every tiered fold protects the newest
-    * committed run (the current batch's own partial, exactly what a
-    * replay overwrites), and a fold preserves the internal `cluster=`
-    * scheme while never touching the underscore-hidden frozen
+    * `maintainEvery` > 0: the [[Maintainer.start]] auto-tick (r18) runs
+    * [[graft.api.Graft.maintain]] over the `cluster=`-partitioned
+    * posting runs every K-th micro-batch; a fold preserves the internal
+    * `cluster=` scheme and never touches the underscore-hidden frozen
     * vocabularies beside the runs. 0 = off. */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             indexDir: String, checkpointDir: String, k: Int = 0,
@@ -213,18 +209,11 @@ object VectorIndexStream {
               graft.api.Graft.MaintenancePolicy()): StreamingQuery = {
     // frozen-vocabulary frames + guards resolve ONCE per stream run
     val vocab = new VocabCache
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        processBatch(b, id, idCol, vecCol, indexDir, k, iters, pqM, pqK,
-          vocab): Unit
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          graft.api.Graft.maintain(b.sparkSession,
-            indexRoots = Seq(indexDir), policy = policy): Unit
-      }
-      .start()
+    Maintainer.start(vectors, checkpointDir, maintainEvery,
+      tick = sp => graft.api.Graft.maintain(sp,
+        indexRoots = Seq(indexDir), policy = policy))(
+      processBatch(_, _, idCol, vecCol, indexDir, k, iters, pqM, pqK,
+        vocab))
   }
 
   /** Create the index: train and persist its vocabularies (IVF centroid
@@ -283,33 +272,17 @@ object VectorIndexStream {
     * (cluster, codes) depend only on its own vector. */
   def sAnnIndex(s: SparkSession, d: String): DataFrame = {
     import graft.operators.PersistedVectorIndex
-    val root = new java.io.File(
-      s"/tmp/graft_stream_ann/${d.replaceAll("[^A-Za-z0-9.]", "_")}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+    val root = StreamFixture.root("graft_stream_ann", d)
+    StreamFixture.reset(root, "checkpoint", "index")
     // the q_ann_persisted build's exact source read
     val e = graft.Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val vecDir = new java.io.File(root, "vecs")
-    Seq("checkpoint", "index")
-      .foreach(n => rm(new java.io.File(root, n)))
-    if (!new java.io.File(vecDir, "_GRAFT_VECS").exists()) {
-      (0 until 4).foreach { b =>
-        e.filter(expr(s"(vec_id div 4) % 4 = $b"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(vecDir, s"b$b").getAbsolutePath)
-      }
-      new java.io.File(vecDir, "_GRAFT_VECS").createNewFile(): Unit
-    }
     val indexDir = new java.io.File(root, "index").getAbsolutePath
     createIndex(e, "vec_id", "embedding", indexDir,
       pqM = PersistedVectorIndex.M, pqK = PersistedVectorIndex.K)
     start(
-      s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"${vecDir.getAbsolutePath}/*"),
+      StreamFixture.fourBatches(e, "vec_id",
+        new java.io.File(root, "vecs"), "_GRAFT_VECS"),
       "vec_id", "embedding", indexDir,
       new java.io.File(root, "checkpoint").getAbsolutePath,
       pqM = PersistedVectorIndex.M, pqK = PersistedVectorIndex.K)

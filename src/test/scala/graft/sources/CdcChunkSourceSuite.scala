@@ -6,9 +6,9 @@ import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DataSource V2 source tests: the V2 path must produce the same
-  * materialization as the binaryFile path, resume exactly-once from its
-  * offset log, and honor source-side `startingSeq` discard. */
+/** DataSource V2 source tests: the V2 path must materialize the fixture's
+  * committed latest-per-key mapping, resume exactly-once from its offset
+  * log, and honor source-side `startingSeq` discard. */
 class CdcChunkSourceSuite extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
@@ -22,23 +22,19 @@ class CdcChunkSourceSuite extends AnyFunSuite {
       .orderBy(col("k")).collect().toSeq
   }
 
-  test("V2 source materialization equals the binaryFile path") {
+  test("V2 source materialization equals the events-derived " +
+      "latest-per-key mapping") {
     val s = TestSpark.spark
     val root = freshRoot("parity")
     val chunks = new java.io.File(root, "chunks").getAbsolutePath
     CdcPipeline.recordFixture(s, sf, chunks)
-
-    CdcPipeline.start(s, chunks,
-      new java.io.File(root, "ck1").getAbsolutePath,
-      new java.io.File(root, "out1").getAbsolutePath).awaitTermination()
     CdcPipeline.startV2(s, chunks,
-      new java.io.File(root, "ck2").getAbsolutePath,
-      new java.io.File(root, "out2").getAbsolutePath).awaitTermination()
+      new java.io.File(root, "ck").getAbsolutePath,
+      new java.io.File(root, "out").getAbsolutePath).awaitTermination()
 
-    val binary = readOut(new java.io.File(root, "out1").getAbsolutePath)
-    val v2 = readOut(new java.io.File(root, "out2").getAbsolutePath)
+    val v2 = readOut(new java.io.File(root, "out").getAbsolutePath)
     assert(v2.nonEmpty)
-    assert(v2 == binary)
+    assert(v2 == graft.streaming.CdcPipelineSuite.expected(sf).collect().toSeq)
   }
 
   test("V2 offsets resume exactly-once across restart") {

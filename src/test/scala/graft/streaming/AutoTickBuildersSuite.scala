@@ -18,19 +18,43 @@ import org.scalatest.funsuite.AnyFunSuite
   * sits in) is a verbatim no-op — the fold's keep-newest guard
   * protected exactly the partials the replay overwrites.
   *
-  * Builders with a MemoryStream-friendly source run the REAL builder
-  * knob end to end (EmbDedup, VectorIndex, Er); the chunk-source and
-  * payload families (Bloom, Media, Bm25) drive processBatch + the
-  * identical tick the builder issues — the knob's own wiring is the
-  * one-line foreachBatch composition, pinned on the streamed builders
-  * and exercised under the oracle by the s_dedup_index and
-  * s_bm25_index gates. */
+  * Every builder's schedule is the one [[Maintainer.start]], whose
+  * step-then-tick order and `maintainEvery` cadence the first test pins
+  * over a MemoryStream. Builders with a MemoryStream-friendly source also
+  * run the REAL builder knob end to end (EmbDedup, VectorIndex, Er); the
+  * chunk-source and payload families (Bloom, Media, Bm25) drive
+  * processBatch + the identical tick their builder hands
+  * [[Maintainer.start]], and the s_dedup_index and s_bm25_index gates
+  * exercise the shared builder's ticks under the oracle. */
 class AutoTickBuildersSuite extends AnyFunSuite {
 
   private val policy = Graft.MaintenancePolicy(fanIn = 2)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  test("the shared builder ticks after the step of every " +
+      "maintainEvery-th batch, and never when maintainEvery is 0") {
+    val s = TestSpark.spark
+    import s.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    def schedule(maintainEvery: Int): Seq[String] = {
+      val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val stream = MemoryStream[Int]
+      val ck = java.nio.file.Files.createTempDirectory("tick_sched").toString
+      // one AvailableNow run per added row: batch ids 0..3 on one checkpoint
+      (0 until 4).foreach { k =>
+        stream.addData(k)
+        Maintainer.start(stream.toDS(), ck, maintainEvery,
+          tick = _ => log.add("tick"): Unit)(
+          (_, id) => log.add(s"step $id"): Unit).awaitTermination()
+      }
+      log.toArray(Array.empty[String]).toSeq
+    }
+    assert(schedule(2) ==
+      Seq("step 0", "step 1", "tick", "step 2", "step 3", "tick"))
+    assert(schedule(0) == Seq("step 0", "step 1", "step 2", "step 3"))
+  }
 
   test("bm25 shape: replay of the newest batch over mid-stream-folded " +
       "postings/doclens/stats is a no-op on the served ranking") {

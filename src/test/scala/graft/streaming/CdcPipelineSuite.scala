@@ -19,12 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (resume from min open txn; re-delivered records change nothing because
   * the sink merge is idempotent).
   */
-class CdcPipelineSuite extends AnyFunSuite {
-  private val sf = "/root/testdata/sf0.001"
+object CdcPipelineSuite {
 
   /** The fixture mapping recomputed relationally (the DuckDB oracle's
     * Spark twin): committed txns only, latest image per key. */
-  private def expected(): DataFrame = {
+  def expected(sf: String): DataFrame = {
     val s = TestSpark.spark
     val ev = Tables.events(s, sf)
       .select(col("event_id"), col("user_id"), col("value").as("v"),
@@ -40,6 +39,12 @@ class CdcPipelineSuite extends AnyFunSuite {
         col("etype"))
       .orderBy(col("k"))
   }
+}
+
+class CdcPipelineSuite extends AnyFunSuite {
+  private val sf = "/root/testdata/sf0.001"
+
+  private def expected(): DataFrame = CdcPipelineSuite.expected(sf)
 
   private def freshDirs(tag: String): (String, String, String) = {
     val root = java.nio.file.Files.createTempDirectory(s"cdc_$tag").toFile
@@ -74,11 +79,11 @@ class CdcPipelineSuite extends AnyFunSuite {
       dst.setLastModified(f.lastModified())
     }
     copyIn(all.take(4))
-    CdcPipeline.start(s, live.getAbsolutePath, ckpt, out).awaitTermination()
+    CdcPipeline.startV2(s, live.getAbsolutePath, ckpt, out).awaitTermination()
 
     // Phase 2: the rest of the stream arrives; resume from the checkpoint.
     copyIn(all.drop(4))
-    CdcPipeline.start(s, live.getAbsolutePath, ckpt, out).awaitTermination()
+    CdcPipeline.startV2(s, live.getAbsolutePath, ckpt, out).awaitTermination()
 
     val resumed = s.read.parquet(out)
       .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
@@ -86,7 +91,7 @@ class CdcPipelineSuite extends AnyFunSuite {
     assert(resumed == expected().collect().toSeq)
 
     // Phase 3: replay with no new data is a no-op (idempotent sink).
-    CdcPipeline.start(s, live.getAbsolutePath, ckpt, out).awaitTermination()
+    CdcPipeline.startV2(s, live.getAbsolutePath, ckpt, out).awaitTermination()
     val replayed = s.read.parquet(out)
       .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
       .orderBy(col("k")).collect().toSeq
@@ -341,7 +346,23 @@ class CdcPipelineSuite extends AnyFunSuite {
     assert((rolledBackKeys -- committedKeys).intersect(gotKeys).isEmpty)
   }
 
-  test("decodeChunk derives the envelope from the in-band schema, not " +
+  /** The V2 reader's envelope projection over one chunk: the
+    * [[graft.cdc.FrameBuffer]] walk (TABSCHEM consumed in-band), then
+    * [[CdcPipeline.envelopeCols]] on each row image. Returns every decoded
+    * record and the (recordType, key, v, etype) of each row image. */
+  private def envelopes(chunk: Array[Byte]) = {
+    import graft.cdc._
+    val fb = new FrameBuffer(SchemaRegistry(
+      Map(CdcPipeline.StreamTabid -> CdcPipeline.StreamTabname)))
+    val recs = fb.append(chunk)
+    assert(fb.pendingBytes == 0)
+    (recs, recs.collect { case r: RowImage =>
+      val (k, v, e) = CdcPipeline.envelopeCols(r, fb.registry)
+      (r.recordType, k, v, e)
+    })
+  }
+
+  test("the envelope projection derives from the in-band schema, not " +
       "fixed positions") {
     import graft.cdc._
     // A captured table whose layout inverts the fixture's: string first,
@@ -356,15 +377,13 @@ class CdcPipelineSuite extends AnyFunSuite {
     out.write(CdcCodec.encodeRowFrame(CdcRecords.INSERT, schema, 10L, 1, 0,
       IndexedSeq("hello", 2.5, 42L)))
     out.write(CdcCodec.encodeFrame(CommitTx(11L, 1, commitTime = 10L)))
-    val envs = CdcPipeline.decodeChunk(out.toByteArray).toList
-    val row = envs.find(_.recordType == "CDC_REC_INSERT").get
-    assert(row.key.contains(42L))
-    assert(row.v.contains(2.5))
-    assert(row.etype.contains("hello"))
-    assert(envs.exists(_.recordType == "CDC_REC_COMMTX"))
+    val (recs, rows) = envelopes(out.toByteArray)
+    assert(rows == Seq(("CDC_REC_INSERT", Some(42L), Some(2.5), Some("hello"))))
+    assert(recs.exists(_.recordType == "CDC_REC_COMMTX"))
   }
 
-  test("decodeChunk yields None envelope fields for a table lacking them") {
+  test("the envelope projection yields None fields for a table lacking " +
+      "them") {
     import graft.cdc._
     val ddl = "only_text varchar(24)"
     val schema = DdlParser.parse(
@@ -374,9 +393,7 @@ class CdcPipelineSuite extends AnyFunSuite {
       TabSchema(CdcPipeline.StreamTabid, 0, 0, 0, 1, ddl)))
     out.write(CdcCodec.encodeRowFrame(CdcRecords.INSERT, schema, 20L, 2, 0,
       IndexedSeq("solo")))
-    val envs = CdcPipeline.decodeChunk(out.toByteArray).toList
-    val row = envs.find(_.recordType == "CDC_REC_INSERT").get
-    assert(row.key.isEmpty && row.v.isEmpty)
-    assert(row.etype.contains("solo"))
+    val (_, rows) = envelopes(out.toByteArray)
+    assert(rows == Seq(("CDC_REC_INSERT", None, None, Some("solo"))))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Tables, TestSpark}
+import graft.cdc.{CdcCodec, RowImage, SchemaRegistry}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +19,14 @@ class StreamDedupSuite extends AnyFunSuite {
     val chunkDir = new java.io.File(
       s"/tmp/graft_stream_dedup/${sf.replaceAll("[^A-Za-z0-9.]", "_")}/chunks")
     assert(new java.io.File(chunkDir, "chunk-003x.bin").isFile)
-    val raw = s.read.format("binaryFile")
-      .load(chunkDir.getAbsolutePath + "/chunk-*.bin")
-      .select(col("content")).collect()
-      .flatMap(r => CdcPipeline.decodeChunk(r.getAs[Array[Byte]](0)))
-      .filter(e => e.recordType == "CDC_REC_INSERT" ||
-        e.recordType == "CDC_REC_UPDAFT")
-    assert(raw.length > raw.map(_.seq).distinct.length,
+    val raw = chunkDir.listFiles().toSeq
+      .filter(f => f.getName.startsWith("chunk-") && f.getName.endsWith(".bin"))
+      .flatMap(f => CdcCodec.decodeAll(
+        java.nio.file.Files.readAllBytes(f.toPath),
+        SchemaRegistry(Map(CdcPipeline.StreamTabid -> CdcPipeline.StreamTabname)))._1)
+      .collect { case r: RowImage if r.recordType == "CDC_REC_INSERT" ||
+          r.recordType == "CDC_REC_UPDAFT" => r.seqNumber }
+    assert(raw.length > raw.distinct.length,
       "fixture should contain re-delivered image rows")
     // Deduped output: exactly one row per event, matching the batch map.
     val want = Tables.events(s, sf)

@@ -2,7 +2,8 @@
 # Pre-commit gate: never commit a tree that doesn't compile.
 #
 # Usage:
-#   tools/preflight.sh                 # compile main+test sources only (fast)
+#   tools/preflight.sh                 # compile main+test sources, and the
+#                                      # benchmark's build (fast)
 #   tools/preflight.sh q_foo q_bar     # compile, then run Verify + DuckDB
 #                                      # oracle compare for the named queries
 #   tools/preflight.sh --all           # compile, then the full all-query gate
@@ -13,8 +14,18 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Offline sbt: every dependency resolves from the local caches.
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
 echo "[preflight] sbt Test/compile ..."
 sbt -batch Test/compile
+
+# perfbench/ is its own sbt project that compiles src/main/scala with its
+# own sources, so a src/main change can break the benchmark's build while
+# the root build still compiles.
+echo "[preflight] perfbench sbt compile ..."
+(cd perfbench && sbt -batch compile)
 
 if [ $# -gt 0 ]; then
   SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
