@@ -58,9 +58,8 @@ object CodecQueries {
       v_smallfloat: java.lang.Float, v_bool: java.lang.Boolean)
 
   /** Typed source projection; l_linenumber == 7 rows go NULL in several
-    * columns to exercise every NULL sentinel path. Exposed package-wide
-    * for the phase profiler (tools.Profile). */
-  private[graft] def srcProjection(s: SparkSession, d: String): DataFrame =
+    * columns to exercise every NULL sentinel path. */
+  private def srcProjection(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d).select(
       (col("l_orderkey") * 8 + col("l_linenumber")).as("seq"),
       (col("l_orderkey") % 1000).cast("int").as("txid"),

@@ -932,8 +932,7 @@ object LlmQueries {
     * layout): the IVF assignment is written as `cluster=<id>` parquet
     * partitions, and the probe scans ONLY the partitions its query batch
     * names — the probed cluster ids are bounded driver metadata
-    * (|batch| ints, the [[graft.streaming.CdcPipeline.mergeLatest]]
-    * touched-bucket pattern), so at 100 TB a probe is a directory
+    * (|batch| ints), so at 100 TB a probe is a directory
     * listing + a few-bucket scan instead of a full-corpus scan. The
     * index cells are TRAINED (r10, [[PersistedVectorIndex]]) — two
     * Lloyd's iterations from the deterministic seeds — so the oracle
@@ -1186,19 +1185,9 @@ object LlmQueries {
   /** The centroid table folded to ONE row: array<struct<cid, cv,
     * cnorm>>, cid-sorted (determinism of the array VALUE; the argmax
     * fold is order-independent regardless). Shared by [[kmeansAssign]]
-    * and [[graft.api.Graft.ivfAssign]].
-    *
-    * Deliberately UNGUARDED against an empty centroid table (r19): the
-    * degenerate case is unreachable on every declared path (training
-    * seeds centroids from the data, so centroids are empty only when
-    * the corpus is — and then no vector row evaluates the fold), and
-    * both guard placements measured as real regressions on the
-    * assignment-heavy queries — a per-row CASE in the fold ~3×, a CASE
-    * projection even on this 1-row frame ~18% (q_ann_trained,
-    * interleaved A/B). The streaming maintainer — the one consumer
-    * with persisted, externally-supplied state — guards driver-side at
-    * its per-run vocabulary collection instead
-    * ([[graft.streaming.VectorIndexStream]]). */
+    * and [[graft.api.Graft.ivfAssign]]. An empty centroid table folds
+    * to one row with an empty `_cents`, which [[bestCentroidExpr]]
+    * rejects in-plan. */
   private[graft] def centroidsRow(cents: DataFrame, cidCol: String,
       cvCol: String, cnormCol: String): DataFrame =
     cents.agg(expr(
@@ -1211,25 +1200,27 @@ object LlmQueries {
     * materialize once per centroid via `transform`; the fold keeps the
     * (sim desc, cid asc) max. The init element is the array's head at
     * sim −2 (below any cosine, and NaN beats it too), so the result
-    * type follows the data. Nothing here guards an EMPTY centroid
-    * table: [[centroidsRow]] folds it to one row with an empty `_cents`,
-    * and every vector then reaches `element_at(_cents, 1)` on an empty
-    * array. Under ANSI mode (Spark 4's default) that raises
-    * INVALID_ARRAY_INDEX_IN_ELEMENT_AT while the assignment runs; with
-    * ANSI off every vector's cluster is NULL. A per-row guard here
-    * measured ~3× on the assignment-heavy queries, so the one guard is
-    * driver-side, in [[graft.streaming.VectorIndexStream]], on the
-    * centroid rows it collects once per stream run. */
+    * type follows the data.
+    *
+    * An EMPTY centroid table ([[centroidsRow]] folds it to an empty
+    * `_cents`) raises in-plan, in the job that assigns, whatever
+    * `spark.sql.ansi.enabled` says: without the guard, the init's
+    * `element_at(_cents, 1)` raises an array-index error that names no
+    * table under ANSI and gives every vector a NULL cluster without it.
+    * The guard wraps the fold, once per row: it adds no job and no
+    * lambda step. */
   private[graft] def bestCentroidExpr(vecCol: String,
       normCol: String): org.apache.spark.sql.Column = expr(
-    s"""aggregate(
+    s"""CASE WHEN size(_cents) = 0 THEN raise_error(
+       |  'the centroid table is empty: there is no centroid to assign a vector to')
+       |ELSE aggregate(
        |  transform(_cents, x -> struct(
        |    round(${dotSpark(vecCol, "x.cv")} / ($normCol * x.cnorm), 6) AS s,
        |    x.cid AS c)),
        |  struct(CAST(-2.0 AS DOUBLE) AS s, element_at(_cents, 1).cid AS c),
        |  (acc, y) -> CASE
        |    WHEN y.s > acc.s OR (y.s = acc.s AND y.c < acc.c) THEN y
-       |    ELSE acc END).c""".stripMargin)
+       |    ELSE acc END).c END""".stripMargin)
 
   /** One Lloyd's recompute step: centroids as element-wise means with the
     * exact-integer quantized-sum discipline (see [[qIvfKmeans]] doc). */

@@ -3,8 +3,8 @@ package graft.streaming
 import graft.Tables
 import graft.cdc._
 import graft.sources.CdcChunkSource
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -40,9 +40,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    function is the unit-testable contract).
   *
   * Scale: chunks decode in parallel (one task per chunk file), transaction
-  * assembly shuffles once on txid into the state store, and the sink's
-  * latest-per-key merge is one window over (key) — the same shape as batch
-  * `q_latest_per_key`. At 100 TB the chunk directory becomes a real queue
+  * assembly shuffles once on txid into the state store, and the sink
+  * appends each batch as one `batch=` run that tiered folds merge with one
+  * window over (key) — the same shape as batch `q_latest_per_key`. At
+  * 100 TB the chunk directory becomes a real queue
   * (Kafka/object-store log) and the sink a transactional table format; both
   * swaps are config, not code, because every stage is declarative.
   */
@@ -295,297 +296,126 @@ object CdcPipeline {
     }
   }
 
-  /** Hash buckets of the materialized table (data buckets `0..n-1`, the
-    * truncate marker in dedicated bucket `n`). Fixed at table creation and
-    * persisted in [[BucketMeta]]; the test default is small, a 100 TB
-    * deployment sizes it so one bucket ≈ one executor-friendly rewrite
-    * unit (thousands). */
-  val DefaultBuckets = 8
-  private val BucketMeta = "_graft_buckets"
+  /** The sink's fold of a set of rows: the newest row of each `k` (the
+    * monotonic guard of ec:747, as a max over `last_seq`), minus every
+    * row at or below the truncate high-water of `rows` itself — except
+    * the marker row on [[TruncateKey]], which carries that high-water
+    * into later reads and folds. Delete tombstones are kept, so a stale
+    * lower-LSN upsert in a later run still loses to them.
+    *
+    * It is the `transform` of the sink's tiered folds and, filtered to
+    * live rows, the read ([[readMaterialized]]). It is not row-local,
+    * yet a fold over any SUBSET of the runs is sound. Latest-per-key is
+    * a max per key, and a max commutes with the union the read takes:
+    * the newest row of `fold(S) ∪ rest` is the newest row of `S ∪ rest`.
+    * The subset's high-water is at most the table's, so a row the fold
+    * drops is one the read hides anyway, and so is any older row of the
+    * same key that the drop brings forward. */
+  private[streaming] def latestPerKey(rows: DataFrame): DataFrame = {
+    val truncT = rows
+      .agg(max(when(col("op") === "truncate", col("last_seq"))).as("_trunc_t"))
+    rows
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("k")).orderBy(col("last_seq").desc)))
+      .filter(col("_rn") === 1)
+      .crossJoin(broadcast(truncT))
+      .filter(col("_trunc_t").isNull || col("op") === "truncate" ||
+        col("last_seq") > col("_trunc_t"))
+      .drop("_rn", "_trunc_t")
+  }
 
-  private def bucketExpr(nb: Int) =
-    when(col("op") === "truncate", lit(nb))
-      .otherwise(pmod(hash(col("k")), lit(nb)))
-      .cast("int").as("bucket")
-
-  /** The table's persisted bucket count, if the table exists. The count is
-    * part of the table layout — changing it would re-route keys — so the
-    * persisted value always wins over a caller's `numBuckets`. */
-  private def readBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                          out: Path): Option[Int] = {
-    val meta = new Path(out, BucketMeta)
-    if (!fs.exists(meta)) {
-      // Missing meta next to existing bucket data is the same hazard as an
-      // unreadable meta: guessing a different count re-routes keys across
-      // buckets, leaving duplicate live rows per key. Refuse.
-      if (hasData(fs, out)) throw new IllegalStateException(
-        s"missing $BucketMeta on a table WITH bucket data at $out — " +
-          "refusing to guess the key routing")
-      None
-    }
-    else {
-      val in = fs.open(meta)
-      val txt =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      txt.trim.toIntOption match {
-        case some @ Some(_) => some
-        case None if !hasData(fs, out) => None // torn init crash: re-init
-        case None => throw new IllegalStateException(
-          s"unreadable $BucketMeta ('${txt.trim}') on a table WITH bucket " +
-            s"data at $out — refusing to guess the key routing")
+  /** Fail loudly on anything at the table root that is not a `batch=`
+    * run (hidden `_`/`.` entries, such as a fold's manifest, aside): the
+    * root-level part files or `bucket=` directories of an older sink
+    * layout. No path reads that layout, and treating it as an empty
+    * table would silently fork the table's history. */
+  private def requireRunLayout(fs: FileSystem, out: Path): Unit =
+    if (fs.exists(out)) fs.listStatus(out).map(_.getPath.getName)
+      .find(n => !n.startsWith("_") && !n.startsWith(".") &&
+        !n.startsWith("batch="))
+      .foreach { n =>
+        throw new IllegalStateException(
+          s"the materialized table at $out holds '$n', which is not a " +
+            "batch= run (a legacy sink layout); no path reads that " +
+            "layout — re-materialize into a fresh directory")
       }
-    }
-  }
 
-  /** Create the table root + bucket-count meta on the FIRST non-empty
-    * merge (an all-empty stream must not leave a parquet-less dir that
-    * breaks schema inference for readers). The meta is written to a temp
-    * name and renamed in, so a crash can never leave a half-written
-    * count next to bucket data. */
-  private def initBucketsIfMissing(fs: org.apache.hadoop.fs.FileSystem,
-                                   out: Path, nb: Int): Unit = {
-    if (readBuckets(fs, out).isEmpty) {
-      fs.mkdirs(out)
-      val tmp = new Path(out, BucketMeta + ".tmp")
-      val os = fs.create(tmp, true)
-      try os.write(nb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-      fs.delete(new Path(out, BucketMeta), false)
-      require(fs.rename(tmp, new Path(out, BucketMeta)),
-        s"could not publish $BucketMeta at $out")
-    }
-  }
-
-  private def hasData(fs: org.apache.hadoop.fs.FileSystem, out: Path): Boolean =
-    fs.exists(out) && fs.listStatus(out)
-      .exists(_.getPath.getName.startsWith("bucket="))
-
-  /** A pre-bucketing `mergeLatest` layout (part files at the table root)
-    * must not be treated as an empty table — its history would be ignored,
-    * and root-level parquet mixed with new `bucket=` dirs breaks partition
-    * discovery ("conflicting directory structures"). Fail fast instead of
-    * silently forking the table's history. */
-  private def rejectLegacyLayout(fs: org.apache.hadoop.fs.FileSystem,
-                                 out: Path): Unit = {
-    if (fs.exists(out)) {
-      val rootParts = fs.listStatus(out).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && (n.startsWith("part-") || n.endsWith(".parquet"))
-      }
-      if (rootParts.nonEmpty) throw new IllegalStateException(
-        s"legacy (unbucketed) materialized-table layout at $out: found " +
-          s"root-level data files (e.g. ${rootParts.head.getPath.getName}); " +
-          "re-materialize into a fresh directory or migrate the files into " +
-          "bucket= partitions before merging")
-    }
-  }
-
-  /** Idempotent latest-per-key merge into a hash-bucketed parquet
-    * "materialized table" — the lsttxn-style sink with the monotonic guard
-    * (ec:747): an existing row only loses to a strictly-or-equally newer
-    * seq, so replaying a batch (foreachBatch retry, checkpoint restart) is
-    * a no-op.
-    *
-    * Scale shape (the point of the savepoint design, ec:2104-2194: ingest
-    * cost must be O(new work), not O(history)): the table is laid out as
-    * `bucket=pmod(hash(k), n)` partitions, and a batch rewrites ONLY the
-    * buckets its keys land in — per-batch cost is O(|batch| + touched
-    * buckets), never O(|table|). TRUNCATE is therefore lazy: committing
-    * one rewrites just the marker bucket (the high-water row on
-    * [[TruncateKey]]); rows at or below the mark linger physically in
-    * untouched buckets but are invisible to [[readMaterialized]] and are
-    * physically dropped whenever their bucket is next rewritten. Delete
-    * tombstones stay in the table so a stale lower-LSN upsert arriving in
-    * a later batch loses the per-key window instead of resurrecting the
-    * key.
-    *
-    * The truncate high-water is computed IN-PLAN (a 1-row aggregate over
-    * the marker bucket ∪ the batch's truncate verbs, broadcast onto every
-    * row — the [[graft.api.Graft.applyChanges]] template), so the sink
-    * runs exactly one job per batch.
-    *
-    * Crash safety: each touched bucket swaps individually (live renamed
-    * aside to `.backup/bucket=B`, then staging promoted), so no committed
-    * row ever exists only as deleted bytes. A crash mid-swap leaves some
-    * buckets old and some new; [[recoverSwap]] re-promotes any orphaned
-    * backup, and the streaming checkpoint replays the uncommitted batch,
-    * which the monotonic merge absorbs per bucket. The sink assumes ONE
-    * writer (foreachBatch serializes batches); a concurrent READER's
-    * recoverSwap can still race the swap window, so every rename is
-    * result-checked and a promotion that finds the live dir re-occupied
-    * clears and retries — staged content supersedes, never silently
-    * drops. On an object store the
-    * same per-bucket two-step keeps every committed row reachable; a
-    * production deployment would swap this sink for a transactional table
-    * format, a config change because the merge itself is declarative. */
-  def mergeLatest(changes: DataFrame, outDir: String,
-                  numBuckets: Int = DefaultBuckets): Unit = {
-    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val spark = changes.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
+  /** The `_SUCCESS`-committed runs of the table, as one frame (with no
+    * `batch` column); None when there is no committed run. */
+  private def committedRows(spark: SparkSession, outDir: String)
+      : Option[DataFrame] = {
     val out = new Path(outDir)
-    val fs = out.getFileSystem(conf)
-    recoverSwap(fs, out)
-    rejectLegacyLayout(fs, out)
-    val nb = readBuckets(fs, out).getOrElse(numBuckets)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireRunLayout(fs, out)
+    val runs = IndexCompaction.committedDirs(fs, out)
+    if (runs.isEmpty) None
+    else Some(spark.read.option("basePath", outDir)
+      .parquet(runs.map(r => new Path(out, r).toString): _*).drop("batch"))
+  }
+
+  /** Idempotent latest-per-key merge into the "materialized table" — the
+    * lsttxn-style sink with the monotonic guard (ec:747): a key's visible
+    * row is its highest-seq change, so replaying a batch (foreachBatch
+    * retry, checkpoint restart, a re-delivered chunk) changes nothing.
+    *
+    * Layout: the table is the maintainers' store — a set of `batch=<id>`
+    * runs, each written whole and committed by its `_SUCCESS` marker —
+    * and [[IndexCompaction]] is the only code that swaps or folds runs.
+    * A merge appends the batch's own rows as ONE new run and then lets
+    * [[IndexCompaction.compactTiered]] fold runs with [[latestPerKey]],
+    * so the ingest cost is O(|batch|) plus folds of at most `fanIn`
+    * similar-sized runs at a time — never a rewrite of the table (the
+    * savepoint design's aim, ec:2104-2194). Reads take the latest row per
+    * key over the committed runs.
+    *
+    * The run id is fresh — 1 + the largest non-negative id present — and
+    * never the stream's batch id: a savepoint restart or a new checkpoint
+    * starts batch ids at 0 again, and direct callers have none. Duplicate
+    * rows are harmless under latest-per-key, so a replayed batch simply
+    * adds a run, and the folds need no protected newest run.
+    *
+    * Crash safety, for the ONE writer (foreachBatch serializes batches):
+    * a run without `_SUCCESS` is a crashed attempt — readers and folds
+    * never see it, and the next merge deletes it before writing, after
+    * [[IndexCompaction.recover]] has finished or undone any crashed fold.
+    * The streaming checkpoint then replays the batch. */
+  def mergeLatest(changes: DataFrame, outDir: String): Unit = {
+    val spark = changes.sparkSession
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Recover BEFORE choosing the id: a crashed fold's manifest names
+    // runs that may sit in its backup, and a fresh id must not reuse one.
+    IndexCompaction.recover(spark, outDir)
+    requireRunLayout(fs, out)
+    val runs =
+      if (!fs.exists(out)) Seq.empty[Path]
+      else fs.listStatus(out).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("batch="))
+    runs.filterNot(r => fs.exists(new Path(r, "_SUCCESS")))
+      .foreach(fs.delete(_, true))
+    val id = 1L + runs.map(_.getName.stripPrefix("batch=").toLong)
+      .foldLeft(-1L)(math.max)
     // Accept op-less frames (plain upsert streams) for compatibility.
     val withOp =
       if (changes.columns.contains("op")) changes
       else changes.withColumn("op", lit("upsert"))
-    val batch = withOp.withColumn("bucket", bucketExpr(nb)).persist()
-    try {
-      // Bounded driver metadata (≤ nb+1 ints), NOT data: which bucket
-      // directories this batch rewrites.
-      val touched = batch.select("bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return // empty micro-batch: nothing to merge
-      initBucketsIfMissing(fs, out, nb)
-      val exists = hasData(fs, out)
-      // ONE table read (one listing/schema pass); both the touched-bucket
-      // base and the marker read are partition-pruned filters of it.
-      val table = if (exists) spark.read.parquet(outDir) else batch.limit(0)
-      // Base = touched buckets ONLY (partition-pruned scan).
-      val base =
-        if (exists) table.filter(col("bucket").isin(touched.toSeq: _*))
-        else table
-      // Truncate high-water in-plan: the persisted marker (its own tiny
-      // bucket, read pruned) ∪ any truncate verbs in this batch.
-      val markerRows =
-        if (exists) table.filter(col("bucket") === nb)
-        else batch.limit(0)
-      val truncT = markerRows
-        .unionByName(batch.filter(col("op") === "truncate"))
-        .agg(max(when(col("op") === "truncate", col("last_seq")))
-          .as("_trunc_t"))
-      val current = base.unionByName(batch)
-        .crossJoin(broadcast(truncT))
-        .filter(col("_trunc_t").isNull || col("op") === "truncate" ||
-          col("last_seq") > col("_trunc_t"))
-        .drop("_trunc_t")
-      val merged = current
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("k")).orderBy(col("last_seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-      val staging = new Path(out, ".staging")
-      val backup = new Path(out, ".backup")
-      fs.delete(staging, true)
-      fs.delete(backup, true)
-      merged.write.partitionBy("bucket").mode("overwrite")
-        .parquet(staging.toString)
-      fs.mkdirs(backup)
-      touched.foreach { b =>
-        val live = new Path(out, s"bucket=$b")
-        val stag = new Path(staging, s"bucket=$b")
-        if (fs.exists(live))
-          require(fs.rename(live, new Path(backup, s"bucket=$b")),
-            s"could not retire $live")
-        if (fs.exists(stag)) {
-          // A concurrent reader's recoverSwap may have re-promoted the
-          // just-retired backup; the staged content supersedes it, so
-          // clear and retry rather than silently dropping the batch.
-          if (!fs.rename(stag, live)) {
-            fs.delete(live, true)
-            require(fs.rename(stag, live), s"could not promote $stag")
-          }
-        }
-        // A bucket fully wiped by truncate has no staging dir: it simply
-        // stops existing — recovery-safe because the batch replays.
-      }
-      fs.delete(backup, true)
-      fs.delete(staging, true)
-    } finally batch.unpersist()
+    withOp.write.parquet(new Path(out, s"batch=$id").toString)
+    IndexCompaction.compactTiered(spark, outDir, transform = latestPerKey): Unit
   }
 
-  /** Maintenance compaction: physically drop every data row at or below
-    * the truncate high-water from ALL buckets (the rows [[mergeLatest]]
-    * wipes lazily and cleans only when a bucket is next touched). Run
-    * off the ingest path when truncate churn has left dead rows in cold
-    * buckets; visible content ([[readMaterialized]]) is unchanged by
-    * construction. Rewrites every non-empty bucket once via the same
-    * checked staging/backup swap as the merge. */
-  def compact(spark: SparkSession, outDir: String): Unit = {
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, out)
-    rejectLegacyLayout(fs, out)
-    if (!hasData(fs, out)) return
-    val nb = readBuckets(fs, out).getOrElse(DefaultBuckets)
-    val table = spark.read.parquet(outDir)
-    val truncT = table.filter(col("bucket") === nb)
-      .agg(max(when(col("op") === "truncate", col("last_seq")))
-        .as("_trunc_t"))
-    val kept = table.crossJoin(broadcast(truncT))
-      .filter(col("_trunc_t").isNull || col("op") === "truncate" ||
-        col("last_seq") > col("_trunc_t"))
-      .drop("_trunc_t")
-    val buckets = fs.listStatus(out).map(_.getPath.getName)
-      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt)
-      .sorted
-    val staging = new Path(out, ".staging")
-    val backup = new Path(out, ".backup")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    kept.write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
-    fs.mkdirs(backup)
-    buckets.foreach { b =>
-      val live = new Path(out, s"bucket=$b")
-      val stag = new Path(staging, s"bucket=$b")
-      if (fs.exists(live))
-        require(fs.rename(live, new Path(backup, s"bucket=$b")),
-          s"could not retire $live")
-      if (fs.exists(stag)) {
-        if (!fs.rename(stag, live)) {
-          fs.delete(live, true)
-          require(fs.rename(stag, live), s"could not promote $stag")
-        }
-      }
+  /** Read the materialized table as its USERS see it: the latest row per
+    * key over the committed runs, live rows only — delete tombstones, the
+    * truncate marker and rows at or below the truncate high-water are
+    * sink bookkeeping ([[Committed]], [[latestPerKey]]), not data. An
+    * absent table reads as an empty one. */
+  def readMaterialized(spark: SparkSession, outDir: String): DataFrame =
+    committedRows(spark, outDir) match {
+      case Some(rows) =>
+        latestPerKey(rows).filter(col("op") === "upsert").drop("op")
+      case None =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          Encoders.product[Committed].schema).drop("op")
     }
-    fs.delete(backup, true)
-    fs.delete(staging, true)
-  }
-
-  /** Promote per-bucket backups left by a crash mid-swap: any
-    * `.backup/bucket=B` whose live dir is missing is re-promoted. The
-    * interrupted batch was never acknowledged to the checkpoint, so it
-    * replays — and the idempotent merge re-applies it per bucket. Safe to
-    * call any time. */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, out: Path): Unit = {
-    val backup = new Path(out, ".backup")
-    if (fs.exists(backup)) {
-      fs.listStatus(backup).foreach { st =>
-        val live = new Path(out, st.getPath.getName)
-        if (!fs.exists(live)) fs.rename(st.getPath, live)
-      }
-    }
-  }
-
-  /** Read the materialized table as its USERS see it: live rows only —
-    * delete tombstones, the truncate marker, and rows at or below the
-    * truncate high-water (lazily wiped: still on disk in buckets the
-    * sink hasn't rewritten since) are sink bookkeeping ([[Committed]] and
-    * [[mergeLatest]] docs), not data. The high-water read is pruned to
-    * the one marker bucket and broadcast — O(1) overhead on the scan. */
-  def readMaterialized(spark: SparkSession, outDir: String): DataFrame = {
-    val p = new Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, p)
-    val df = spark.read.parquet(outDir)
-    if (!df.columns.contains("op")) df
-    else {
-      val marker = readBuckets(fs, p) match {
-        case Some(nb) if df.columns.contains("bucket") =>
-          df.filter(col("bucket") === nb)
-        case _ => df
-      }
-      val truncT = marker.filter(col("op") === "truncate")
-        .agg(max(col("last_seq")).as("_trunc_t"))
-      df.filter(col("op") === "upsert")
-        .crossJoin(broadcast(truncT))
-        .filter(col("_trunc_t").isNull || col("last_seq") > col("_trunc_t"))
-        .drop("_trunc_t", "op", "bucket")
-    }
-  }
 
   /** The shared downstream: txn assembly + idempotent merge sink.
     * Heartbeats (V2 source) advance source progress but carry no change —
@@ -603,16 +433,14 @@ object CdcPipeline {
   }
 
   /** The `informixcdc_lsttxn` savepoint analog: the highest committed LSN
-    * present in the materialized table (0 when nothing is materialized —
-    * the NOTFOUND → 0 rule, ec:642-644). */
-  def lastCommittedSeq(spark: SparkSession, outDir: String): Long = {
-    val p = new Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, p) // a crashed swap must not read as "no savepoint"
-    if (!hasData(fs, p)) 0L
-    else spark.read.parquet(outDir)
-      .agg(coalesce(max(col("last_seq")), lit(0L))).head().getLong(0)
-  }
+    * in the materialized table's committed runs (0 when nothing is
+    * materialized — the NOTFOUND → 0 rule, ec:642-644). A fold that
+    * crashed mid-swap can hide runs until the next merge recovers it;
+    * the value then reads low, which only re-delivers history that the
+    * latest-per-key merge absorbs. */
+  def lastCommittedSeq(spark: SparkSession, outDir: String): Long =
+    committedRows(spark, outDir).fold(0L)(
+      _.agg(coalesce(max(col("last_seq")), lit(0L))).head().getLong(0))
 
   /** Restart WITHOUT a checkpoint — the reference's savepoint path: resolve
     * the activation LSN from persisted state via the ec:2172-2194 decision
@@ -960,8 +788,8 @@ object CdcPipeline {
     val chunkDir = new java.io.File(root, "chunks")
     val checkpoint = new java.io.File(root, "checkpoint")
     val outDir = new java.io.File(root, "materialized")
-    // Fresh deterministic run: clear all STATE (staging/backup live INSIDE
-    // the table root); the recorded chunk fixture is content-addressed by
+    // Fresh deterministic run: clear all STATE (the checkpoint and the
+    // table's runs); the recorded chunk fixture is content-addressed by
     // its inputs and reused.
     StreamFixture.reset(root, "checkpoint", "materialized")
     recordFixtureCached(s, d, chunkDir.getAbsolutePath)

@@ -11,11 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * from the maintained counts — how a production data-quality monitor
   * actually works (the alert reads a maintained aggregate; it never
   * replays the log). The streaming twin of `q_drift_psi`, and the second
-  * consumer of the [[MvStream]] versioned-snapshot exactly-once machinery:
-  * histogram counts are an additive monoid exactly like the MV's
-  * count/sum, so a replayed micro-batch must be DETECTED (per-bucket
-  * version skip), not absorbed — latest-wins idempotence would
-  * double-count.
+  * consumer of the [[MvStream]] exactly-once store: histogram counts are
+  * an additive monoid exactly like the MV's count/sum, so a replayed
+  * micro-batch must REPLACE its own run (overwrite by batch id), not be
+  * absorbed — latest-wins idempotence would double-count.
   *
   * The maintained key is `etype ':' value-bucket` — the (segment, bucket)
   * grid cell; the bucket derives in exact integer cents (the q_drift_psi
@@ -30,11 +29,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the streaming IVM invariant — stream-maintained histogram ≡ batch
   * recompute over the whole log — checked to the nano-nat.
   *
-  * Scale: per micro-batch the work is O(|batch| + touched grid cells);
-  * the maintained state is the |segments| × nBuckets grid (bounded, tiny),
-  * untouched buckets are never read, and the monitor read scans only the
-  * latest complete snapshots. At 100 TB the log is never re-scanned —
-  * that is the entire point.
+  * Scale: per micro-batch the work is O(|batch|) plus bounded tiered
+  * folds; the maintained state is the |segments| × nBuckets grid
+  * (bounded, tiny), and the monitor read scans only the committed runs.
+  * At 100 TB the log is never re-scanned — that is the entire point.
   */
 object DriftStream {
 

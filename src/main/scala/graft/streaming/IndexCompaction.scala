@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
 
-/** Compaction for the streaming index/pair-log layouts
-  * ([[DedupStream]], [[EmbDedupStream]], [[VectorIndexStream]]): rewrite
-  * the accumulated `batch=<id>` partition directories into ONE
-  * consolidated `batch=<id>` directory, exactly-once.
+/** Compaction for every maintained `batch=<id>` store — the index and
+  * pair logs ([[DedupStream]], [[EmbDedupStream]], [[VectorIndexStream]]),
+  * the label log, the CDC merge sink ([[CdcPipeline.mergeLatest]]) and
+  * the streaming MV ([[MvStream]]): rewrite accumulated `batch=<id>`
+  * partition directories into ONE consolidated `batch=<id>` directory,
+  * exactly-once. It is the only code that swaps or folds runs.
   *
   * Why it exists (100 TB lifecycle): the streams append one `batch=`
   * directory per micro-batch forever, so after months of ingestion the
@@ -37,9 +39,9 @@ import java.nio.charset.StandardCharsets
   *    planes, PQ codebook) — underscore-hidden from discovery and not
   *    touched: a compaction never changes what any probe returns.
   *
-  * Exactly-once (write-then-swap, the CdcPipeline sink discipline):
-  * the consolidated data is fully written to an underscore-hidden
-  * staging directory first (invisible to partition discovery), then a
+  * Exactly-once (write-then-swap): the consolidated data is fully
+  * written to an underscore-hidden staging directory first (invisible
+  * to partition discovery), then a
   * MANIFEST (`_graft_compact_manifest`: consumed dir names + target id)
   * is created — the commit point — and only then do the renames run:
   * consumed dirs move into hidden backup, staging promotes to
@@ -49,9 +51,11 @@ import java.nio.charset.StandardCharsets
   * absent → delete the stray staging dir, restore any backup children.
   * `compact` runs [[recover]] first, so a crashed compaction heals on
   * the next attempt. During the post-commit renames, readers briefly
-  * miss the moved batches (bounded by a few directory renames) — the
-  * same swap-window concession the CDC merge sink documents; a recall
-  * structure degrades softly there, and never serves duplicate rows.
+  * miss the moved batches (bounded by a few directory renames): a recall
+  * structure degrades softly there, a latest-per-key or aggregate read
+  * (the CDC sink, the MV) answers as if the moved runs were not yet
+  * written, and no read ever serves duplicate rows. Readers never
+  * [[recover]]; the next write does.
   *
   * Single-writer, like the streams: compaction must not race an active
   * ingestion of the same root (run it between batches or from the
@@ -282,7 +286,7 @@ object IndexCompaction {
 
   /** `_SUCCESS`-committed `batch=` directory names under `root`, sorted
     * by batch id ascending (compacted negative runs first). */
-  private def committedDirs(fs: FileSystem, rp: Path): Seq[String] =
+  private[streaming] def committedDirs(fs: FileSystem, rp: Path): Seq[String] =
     batchDirs(fs, rp)
       .filter(d => fs.exists(new Path(new Path(rp, d), "_SUCCESS")))
       .sortBy(batchId)
@@ -439,7 +443,11 @@ object IndexCompaction {
     * the alias-clearing contraction incremental (per-run fold
     * high-water metadata via `runMeta`, alias partials retired once
     * every surviving run post-dates them) instead of coupled to the
-    * monolithic [[compact]]'s fold-everything barrier.
+    * monolithic [[compact]]'s fold-everything barrier. The one other
+    * kind of sound transform is a per-key merge that the READ applies
+    * too — a max or a monoid, which commutes with the union the read
+    * takes: the CDC sink's latest-per-key ([[CdcPipeline.latestPerKey]])
+    * and the streaming MV's count/sum/max ([[MvStream]]).
     * `runMeta` (name → content) is stamped into every run this
     * invocation produces, atomically with the run's data.
     * Single-writer like [[compact]]. */

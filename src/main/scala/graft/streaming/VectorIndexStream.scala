@@ -121,11 +121,10 @@ object VectorIndexStream {
       // per-batch scan/fold/collect jobs (r19).
       vocab.cents = graft.operators.Materialize.local(
         readCentroids(spark, indexDir), maxCentroids(k))
-      // The empty-vocabulary guard lives HERE, driver-side on the
-      // already-collected rows (r19, ADVICE — an in-expression guard
-      // measured as a real regression on the assignment queries): an
-      // index created from an empty corpus must fail loudly, not
-      // assign every later vector a NULL cluster.
+      // An index created from an empty corpus fails here, on the
+      // already-collected rows, so the message can name the stored
+      // table and the rebuild; the assignment's in-plan guard
+      // (LlmQueries.bestCentroidExpr) covers every other caller.
       require(!vocab.cents.isEmpty,
         s"empty centroid table under ${centroidsPath(indexDir)} — the " +
           "index was created from an empty corpus; rebuild it from a " +

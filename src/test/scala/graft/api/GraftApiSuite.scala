@@ -271,6 +271,19 @@ class GraftApiSuite extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // query 1 probes cluster 10 only: itself then vec 2; query 4 cluster 20
     assert(hits == Set((1L, 1, 1L), (1L, 2, 2L), (4L, 1, 4L), (4L, 2, 5L)))
+
+    // An empty centroid table fails loudly in the assigning job, with or
+    // without ANSI mode (unguarded: an index error, or NULL clusters).
+    val noCents = cents.limit(0)
+    val conf = vecs.sparkSession.conf
+    val ansi = conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { mode =>
+      conf.set("spark.sql.ansi.enabled", mode)
+      val e = intercept[Exception](
+        Graft.ivfAssign(vecs, "vid", "emb", noCents, "cid", "cv").collect())
+      assert(e.getMessage.contains("the centroid table is empty"),
+        s"ansi=$mode: ${e.getMessage}")
+    } finally conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("hardNegatives mines close different-label vectors, never the " +

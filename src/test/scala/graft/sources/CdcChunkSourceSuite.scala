@@ -15,12 +15,10 @@ class CdcChunkSourceSuite extends AnyFunSuite {
   private def freshRoot(tag: String) =
     java.nio.file.Files.createTempDirectory(s"cdcv2_$tag").toFile
 
-  private def readOut(out: String) = {
-    val s = TestSpark.spark
-    s.read.parquet(out)
+  private def readOut(out: String) =
+    CdcPipeline.readMaterialized(TestSpark.spark, out)
       .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
       .orderBy(col("k")).collect().toSeq
-  }
 
   test("V2 source materialization equals the events-derived " +
       "latest-per-key mapping") {
@@ -74,9 +72,7 @@ class CdcChunkSourceSuite extends AnyFunSuite {
       new java.io.File(root, "ck").getAbsolutePath,
       new java.io.File(root, "out").getAbsolutePath,
       startingSeq = Long.MaxValue).awaitTermination()
-    val outDir = new java.io.File(root, "out")
-    val rows = if (outDir.exists()) readOut(outDir.getAbsolutePath) else Seq.empty
-    assert(rows.isEmpty)
+    assert(readOut(new java.io.File(root, "out").getAbsolutePath).isEmpty)
   }
 
   test("savepoint restart: fresh checkpoint resumes from last committed + 1") {

@@ -61,7 +61,8 @@ class ChunkEvolveSuite extends AnyFunSuite {
       new java.io.File(root, "ck").getAbsolutePath,
       new java.io.File(root, "out").getAbsolutePath).awaitTermination()
 
-    val got = s.read.parquet(new java.io.File(root, "out").getAbsolutePath)
+    val got = CdcPipeline.readMaterialized(s,
+        new java.io.File(root, "out").getAbsolutePath)
       .select(col("k"), col("v"), col("etype"))
       .orderBy(col("k")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), Option(r.getString(2))))

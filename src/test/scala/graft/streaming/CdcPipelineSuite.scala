@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Tables, TestSpark}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,6 +47,11 @@ class CdcPipelineSuite extends AnyFunSuite {
 
   private def expected(): DataFrame = CdcPipelineSuite.expected(sf)
 
+  private def materialized(out: String) =
+    CdcPipeline.readMaterialized(TestSpark.spark, out)
+      .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
+      .orderBy(col("k")).collect().toSeq
+
   private def freshDirs(tag: String): (String, String, String) = {
     val root = java.nio.file.Files.createTempDirectory(s"cdc_$tag").toFile
     (new java.io.File(root, "chunks").getAbsolutePath,
@@ -84,94 +90,136 @@ class CdcPipelineSuite extends AnyFunSuite {
     // Phase 2: the rest of the stream arrives; resume from the checkpoint.
     copyIn(all.drop(4))
     CdcPipeline.startV2(s, live.getAbsolutePath, ckpt, out).awaitTermination()
+    val resumed = materialized(out)
 
-    val resumed = s.read.parquet(out)
-      .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
-      .orderBy(col("k")).collect().toSeq
+    // Reference: a single uninterrupted run over the full fixture, and the
+    // events-derived mapping.
+    val single = new java.io.File(chunks + ".single").getAbsolutePath
+    CdcPipeline.startV2(s, staged.getAbsolutePath, ckpt + ".single", single)
+      .awaitTermination()
+    assert(resumed == materialized(single))
     assert(resumed == expected().collect().toSeq)
 
     // Phase 3: replay with no new data is a no-op (idempotent sink).
     CdcPipeline.startV2(s, live.getAbsolutePath, ckpt, out).awaitTermination()
-    val replayed = s.read.parquet(out)
-      .select(col("k"), col("last_seq"), col("v"), col("old_v"), col("etype"))
-      .orderBy(col("k")).collect().toSeq
-    assert(replayed == resumed)
+    assert(materialized(out) == resumed)
   }
 
-  test("crash between per-bucket swap renames is recovered; no committed row is lost") {
-    val s2val = TestSpark.spark
-    import s2val.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc_swap").toFile
-    val out = new java.io.File(root, "mat").getAbsolutePath
-
-    val batch1 = Seq((1L, 10L, 1.0, Option.empty[Double], "a"),
-      (2L, 11L, 2.0, Option.empty[Double], "b"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch1, out)
-
-    // Simulate a crash BETWEEN a bucket's two renames: the live bucket dir
-    // was renamed aside to .backup/bucket=B, promotion of its staging dir
-    // never happened.
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s2val.sparkContext.hadoopConfiguration)
-    val bucketDirs = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(_.getPath.getName.startsWith("bucket=")).map(_.getPath)
-    assert(bucketDirs.nonEmpty)
-    val victim = bucketDirs.head
-    val backup = new org.apache.hadoop.fs.Path(out, ".backup")
-    fs.mkdirs(backup)
-    fs.rename(victim, new org.apache.hadoop.fs.Path(backup, victim.getName))
-    assert(!fs.exists(victim))
-
-    // The savepoint read must recover the orphaned bucket, not lose it.
-    assert(CdcPipeline.lastCommittedSeq(s2val, out) == 11L)
-    assert(fs.exists(victim))
-
-    // And a later merge on top keeps every committed row.
-    val batch2 = Seq((2L, 12L, 2.5, Option.empty[Double], "b2"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch2, out)
-    val rows = CdcPipeline.readMaterialized(s2val, out).orderBy("k")
-      .select("k", "last_seq", "v").collect().toSeq.map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(rows == Seq((1L, 10L, 1.0), (2L, 12L, 2.5)))
-  }
-
-  test("merge refuses a legacy unbucketed table layout instead of forking history") {
+  private def changes(rows: (Long, Long, Double, String)*): DataFrame = {
     val s = TestSpark.spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc_legacy").toFile
-    val out = new java.io.File(root, "mat").getAbsolutePath
-    // Old mergeLatest layout: part files at the table ROOT, no bucket= dirs.
+    rows.map { case (k, seq, v, e) => (k, seq, v, Option.empty[Double], e) }
+      .toDF("k", "last_seq", "v", "old_v", "etype")
+  }
+
+  private def truncateAt(seq: Long): DataFrame = {
+    val s = TestSpark.spark
+    import s.implicits._
+    Seq((CdcPipeline.TruncateKey, seq, 0.0, Option.empty[Double], "", "truncate"))
+      .toDF("k", "last_seq", "v", "old_v", "etype", "op")
+  }
+
+  private def visible(out: String): Seq[(Long, Long)] =
+    CdcPipeline.readMaterialized(TestSpark.spark, out).orderBy("k")
+      .select("k", "last_seq").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  private def runs(out: String): Seq[String] =
+    Option(new java.io.File(out).list()).toSeq.flatten
+      .filter(_.startsWith("batch=")).sorted
+
+  private def freshTable(tag: String): String =
+    new java.io.File(java.nio.file.Files.createTempDirectory(tag).toFile, "mat")
+      .getAbsolutePath
+
+  test("a crashed run is invisible to every reader; the next merge gives " +
+      "the crash-free result") {
+    val s = TestSpark.spark
+    val out = freshTable("cdc_crash")
+    CdcPipeline.mergeLatest(changes((1L, 10L, 1.0, "a"), (2L, 11L, 2.0, "b")), out)
+
+    // A crashed write: a batch= dir with garbage bytes and no _SUCCESS.
+    val crashed = new java.io.File(out, "batch=1")
+    crashed.mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(crashed, "part-00000.snappy.parquet").toPath,
+      "garbage".getBytes("UTF-8"))
+    assert(visible(out) == Seq((1L, 10L), (2L, 11L)))
+    assert(CdcPipeline.lastCommittedSeq(s, out) == 11L)
+
+    CdcPipeline.mergeLatest(changes((2L, 12L, 2.5, "b2")), out)
+    assert(!new java.io.File(crashed, "part-00000.snappy.parquet").exists(),
+      "the next merge did not delete the crashed run")
+    val twin = freshTable("cdc_crash_twin")
+    CdcPipeline.mergeLatest(changes((1L, 10L, 1.0, "a"), (2L, 11L, 2.0, "b")), twin)
+    CdcPipeline.mergeLatest(changes((2L, 12L, 2.5, "b2")), twin)
+    assert(visible(out) == visible(twin))
+    assert(visible(out) == Seq((1L, 10L), (2L, 12L)))
+    assert(CdcPipeline.lastCommittedSeq(s, out) == 12L)
+  }
+
+  test("a fold crashed after its manifest rolls forward on the next merge") {
+    val s = TestSpark.spark
+    val out = freshTable("cdc_foldcrash")
+    val twin = freshTable("cdc_foldcrash_twin")
+    val batches = Seq(
+      changes((1L, 10L, 1.0, "a"), (2L, 11L, 2.0, "b")),
+      changes((2L, 12L, 2.5, "b2")),
+      truncateAt(10L),
+      changes((3L, 20L, 3.0, "c")))
+    batches.take(3).foreach(CdcPipeline.mergeLatest(_, out))
+    batches.foreach(CdcPipeline.mergeLatest(_, twin))
+    assert(runs(out) == Seq("batch=0", "batch=1", "batch=2"))
+
+    // The state a crash after the manifest commit leaves: the folded rows
+    // staged, the manifest naming the three runs, one of them already
+    // moved into the backup.
+    val root = new Path(out)
+    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    CdcPipeline.latestPerKey(s.read.option("basePath", out)
+        .parquet(runs(out).map(r => s"$out/$r"): _*).drop("batch"))
+      .write.parquet(s"$out/_graft_compact_tmp")
+    val m = f.create(new Path(root, "_graft_compact_manifest"), true)
+    m.write("-1\nbatch=0\nbatch=1\nbatch=2".getBytes("UTF-8")); m.close()
+    f.mkdirs(new Path(root, "_graft_compact_backup"))
+    assert(f.rename(new Path(root, "batch=0"),
+      new Path(root, "_graft_compact_backup/batch=0")))
+
+    CdcPipeline.mergeLatest(batches(3), out)
+    Seq("_graft_compact_manifest", "_graft_compact_backup", "_graft_compact_tmp")
+      .foreach(n => assert(!f.exists(new Path(root, n)), s"$n survived recovery"))
+    assert(runs(out) == Seq("batch=-1", "batch=0"))
+    assert(visible(out) == visible(twin))
+    assert(visible(out) == Seq((2L, 12L), (3L, 20L)))
+    assert(CdcPipeline.lastCommittedSeq(s, out) == 20L)
+  }
+
+  test("the sink refuses a root that holds anything but batch= runs") {
+    val s = TestSpark.spark
+    import s.implicits._
+    // Root-level part files: the pre-bucketing layout.
+    val flat = freshTable("cdc_legacy")
     Seq((1L, 10L, 1.0, Option.empty[Double], "a"))
       .toDF("k", "last_seq", "v", "old_v", "etype")
-      .write.parquet(out)
-    val batch = Seq((2L, 11L, 2.0, Option.empty[Double], "b"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    val e = intercept[IllegalStateException](CdcPipeline.mergeLatest(batch, out))
-    assert(e.getMessage.contains("legacy"))
-    val e2 = intercept[IllegalStateException](CdcPipeline.compact(s, out))
-    assert(e2.getMessage.contains("legacy"))
+      .write.parquet(flat)
+    // bucket= directories: the per-bucket swap layout.
+    val bucketed = freshTable("cdc_bucketed")
+    Seq((1L, 10L, 1.0, Option.empty[Double], "a", "upsert", 0))
+      .toDF("k", "last_seq", "v", "old_v", "etype", "op", "bucket")
+      .write.partitionBy("bucket").parquet(bucketed)
+    Seq(flat, bucketed).foreach { out =>
+      val batch = changes((2L, 11L, 2.0, "b"))
+      Seq[() => Any](() => CdcPipeline.mergeLatest(batch, out),
+        () => CdcPipeline.readMaterialized(s, out),
+        () => CdcPipeline.lastCommittedSeq(s, out)).foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("legacy") &&
+          e.getMessage.contains("fresh directory"), e.getMessage)
+      }
+      assert(runs(out).isEmpty, "a refused merge wrote a run")
+    }
   }
 
-  test("merge refuses bucket data with a missing bucket-count meta") {
-    val s = TestSpark.spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc_nometa").toFile
-    val out = new java.io.File(root, "mat").getAbsolutePath
-    val batch1 = Seq((1L, 10L, 1.0, Option.empty[Double], "a"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch1, out)
-    // Delete the meta: guessing a different count would re-route keys and
-    // leave duplicate live rows per key, so the merge must refuse.
-    assert(new java.io.File(out, "_graft_buckets").delete())
-    val batch2 = Seq((2L, 11L, 2.0, Option.empty[Double], "b"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    val e = intercept[IllegalStateException](CdcPipeline.mergeLatest(batch2, out))
-    assert(e.getMessage.contains("missing"))
-  }
-
-  /** Snapshot of a bucket dir: file name → (length, content md5). */
+  /** Snapshot of a run dir: file name → (length, content md5). */
   private def snapshot(dir: java.io.File): Map[String, (Long, String)] =
     dir.listFiles().filter(_.isFile).filterNot(_.getName.startsWith("."))
       .map { f =>
@@ -180,93 +228,55 @@ class CdcPipelineSuite extends AnyFunSuite {
         f.getName -> (f.length(), md5.map("%02x".format(_)).mkString)
       }.toMap
 
-  test("merge rewrites only the buckets the batch touches; untouched " +
-      "bucket files are byte-identical (the prune, not just the answer)") {
+  test("a merge writes only its batch's rows as one new run; earlier runs " +
+      "stay byte-identical") {
     val s = TestSpark.spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc_prune").toFile
-    val out = new java.io.File(root, "mat").getAbsolutePath
+    val out = freshTable("cdc_append")
+    CdcPipeline.mergeLatest(changes((1L, 10L, 1.0, "a"), (2L, 11L, 2.0, "b")), out)
+    val first = new java.io.File(out, "batch=0")
+    val before = snapshot(first)
+    assert(before.nonEmpty)
 
-    // Pick keys in two DIFFERENT buckets of the default layout.
-    val nb = CdcPipeline.DefaultBuckets
-    val buckets = s.range(0, 64)
-      .select(col("id"), pmod(hash(col("id")), lit(nb)).cast("int").as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val kA = buckets.keys.min
-    val kB = buckets.collectFirst { case (k, b) if b != buckets(kA) => k }.get
+    CdcPipeline.mergeLatest(changes((2L, 12L, 2.5, "b2")), out)
+    assert(runs(out) == Seq("batch=0", "batch=1"))
+    assert(snapshot(first) == before)
+    assert(s.read.parquet(s"$out/batch=1").count() == 1L)
 
-    val batch1 = Seq((kA, 10L, 1.0, Option.empty[Double], "a"),
-      (kB, 11L, 2.0, Option.empty[Double], "b"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch1, out)
-    val dirA = new java.io.File(out, s"bucket=${buckets(kA)}")
-    val dirB = new java.io.File(out, s"bucket=${buckets(kB)}")
-    val beforeA = snapshot(dirA)
-    val beforeB = snapshot(dirB)
-    assert(beforeA.nonEmpty && beforeB.nonEmpty)
-
-    // Batch 2 touches ONLY kB's bucket.
-    val batch2 = Seq((kB, 12L, 2.5, Option.empty[Double], "b2"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch2, out)
-    assert(snapshot(dirA) == beforeA)   // untouched bucket: byte-identical
-    assert(snapshot(dirB) != beforeB)   // touched bucket: rewritten
-
-    // A truncate-only batch rewrites just the MARKER bucket (lazy wipe):
-    // both data buckets' files stay byte-identical, yet the wiped rows
-    // are invisible to readers.
-    val afterA = snapshot(dirA)
-    val afterB = snapshot(dirB)
-    val truncBatch = Seq(
-      (CdcPipeline.TruncateKey, 11L, 0.0, Option.empty[Double], "", "truncate"))
-      .toDF("k", "last_seq", "v", "old_v", "etype", "op")
-    CdcPipeline.mergeLatest(truncBatch, out)
-    assert(snapshot(dirA) == afterA)
-    assert(snapshot(dirB) == afterB)
-    assert(new java.io.File(out, s"bucket=$nb").isDirectory)
-    val visible = CdcPipeline.readMaterialized(s, out)
-      .select("k", "last_seq").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(visible == Seq((kB, 12L))) // kA@10 and the 11-seq wipe line: only kB@12 survives
-
-    // Touching kA's bucket next physically cleans its wiped row.
-    val batch3 = Seq((kA, 20L, 9.0, Option.empty[Double], "a2"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch3, out)
-    val rowsA = s.read.parquet(dirA.getAbsolutePath)
-      .select("k", "last_seq").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(rowsA == Seq((kA, 20L))) // the seq-10 row is physically gone
+    // A truncate-only batch writes just the marker; the wiped rows stay on
+    // disk in the older runs, yet readers no longer see them.
+    CdcPipeline.mergeLatest(truncateAt(11L), out)
+    assert(snapshot(first) == before)
+    assert(s.read.parquet(s"$out/batch=2").select("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(CdcPipeline.TruncateKey))
+    assert(visible(out) == Seq((2L, 12L)))
   }
 
-  test("compact drops every lazily-wiped row from cold buckets; visible " +
-      "content unchanged") {
+  test("a tiered fold drops rows at or below the truncate high-water and " +
+      "keeps the marker; visible content unchanged") {
     val s = TestSpark.spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("cdc_compact").toFile
-    val out = new java.io.File(root, "mat").getAbsolutePath
-    val batch1 = Seq((1L, 10L, 1.0, Option.empty[Double], "a"),
-      (2L, 30L, 2.0, Option.empty[Double], "b"),
-      (3L, 11L, 3.0, Option.empty[Double], "c"))
-      .toDF("k", "last_seq", "v", "old_v", "etype")
-    CdcPipeline.mergeLatest(batch1, out)
+    val out = freshTable("cdc_fold")
+    // One-row batches, so the runs are alike in size and share a tier.
+    CdcPipeline.mergeLatest(changes((1L, 10L, 1.0, "a")), out)
+    CdcPipeline.mergeLatest(changes((3L, 11L, 3.0, "c")), out)
     // Truncate at 20: k=1@10 and k=3@11 become invisible but stay on disk.
-    val trunc = Seq(
-      (CdcPipeline.TruncateKey, 20L, 0.0, Option.empty[Double], "", "truncate"))
-      .toDF("k", "last_seq", "v", "old_v", "etype", "op")
-    CdcPipeline.mergeLatest(trunc, out)
-    val before = CdcPipeline.readMaterialized(s, out)
-      .select("k", "last_seq").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(before == Set((2L, 30L)))
-    assert(s.read.parquet(out).filter("op = 'upsert'").count() == 3) // junk on disk
+    CdcPipeline.mergeLatest(truncateAt(20L), out)
+    assert(visible(out).isEmpty)
+    assert(runs(out).size == 3)
+    assert(s.read.parquet(out).filter("op = 'upsert'").count() == 2) // junk on disk
 
-    CdcPipeline.compact(s, out)
-    val after = CdcPipeline.readMaterialized(s, out)
-      .select("k", "last_seq").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(after == before)                                         // same visible data
-    assert(s.read.parquet(out).filter("op = 'upsert'").count() == 1) // junk gone
+    // The fourth run completes a tier: the merge folds the four.
+    CdcPipeline.mergeLatest(changes((2L, 30L, 2.0, "b")), out)
+    assert(runs(out) == Seq("batch=-1"), runs(out))
+    assert(visible(out) == Seq((2L, 30L)))
+    val kept = s.read.parquet(out)
+    assert(kept.filter("op = 'upsert'").count() == 1) // junk gone
     // the marker survives so later low-seq stragglers still get wiped
-    assert(s.read.parquet(out).filter("op = 'truncate'").count() == 1)
+    assert(kept.filter("op = 'truncate'").count() == 1)
+    CdcPipeline.mergeLatest(changes((5L, 15L, 5.0, "late"), (2L, 25L, 9.0, "stale")), out)
+    assert(visible(out) == Seq((2L, 30L)))
     assert(CdcPipeline.lastCommittedSeq(s, out) == 30L)
   }
+
   test("commit windows: watermark flushes every window via heartbeats; " +
       "late commits in a non-monotonic stream are dropped, not corrupted") {
     val s = TestSpark.spark

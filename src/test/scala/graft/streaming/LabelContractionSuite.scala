@@ -81,13 +81,28 @@ class LabelContractionSuite extends AnyFunSuite {
     }
   }
 
+  /** The uncompacted 64-batch chain, built once per suite: the
+    * monolithic twin of the 64-batch test and the crash-points base.
+    * Tests work on a [[copyTree]] copy, never on this root. */
+  private lazy val chain64: String = {
+    val root = Files.createTempDirectory("contract_chain64").toString
+    (0 until 64).foreach(advanceChain(root, 64, _))
+    root
+  }
+
+  /** A private copy of [[chain64]] under a fresh directory. */
+  private def chain64Copy(tag: String): String = {
+    val root = Files.createTempDirectory(tag).toString + "/l"
+    copyTree(chain64, root)
+    root
+  }
+
   test("64 batches: per-batch tiered closure folds + bounded refreshes " +
       "clear the alias log; labels identical to the monolithic twin") {
-    val base = Files.createTempDirectory("contract_base").toString
+    val base = chain64Copy("contract_base") // twin: no maintenance until the end
     val inc = Files.createTempDirectory("contract_inc").toString
 
     (0 until 64).foreach { k =>
-      advanceChain(base, 64, k) // twin: no maintenance until the end
       advanceChain(inc, 64, k)
       val st = LabelLog.compactStateTiered(s, inc, fanIn = 4)
       assert(st.maxFoldConsumed <= 4,
@@ -131,10 +146,7 @@ class LabelContractionSuite extends AnyFunSuite {
 
   test("crash points: committed mid-refresh fold rolls forward; an " +
       "orphaned alias partial is a no-op and is swept") {
-    val base = Files.createTempDirectory("contract_crash_base").toString
-    (0 until 64).foreach(advanceChain(base, 64, _))
-    val root = Files.createTempDirectory("contract_crash").toString + "/l"
-    copyTree(base, root)
+    val root = chain64Copy("contract_crash")
     val w = want(64)
 
     // hand-build the state a crash between manifest commit and swap

@@ -4,9 +4,9 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Exactly-once semantics of the versioned-snapshot MV merge: retry
-  * idempotence (the failure latest-wins sinks absorb but additive
-  * aggregates cannot), partial-crash replay, and the streaming IVM
+/** Exactly-once semantics of the MV's `batch=` runs: retry idempotence
+  * (the failure latest-wins sinks absorb but additive aggregates cannot),
+  * crashed-run replay, replay across tiered folds, and the streaming IVM
   * invariant stream-maintained ≡ recomputed. */
 class MvStreamSuite extends AnyFunSuite {
 
@@ -45,25 +45,22 @@ class MvStreamSuite extends AnyFunSuite {
     assert(state(mv) == afterTwo, "replayed batch changed the MV")
   }
 
-  test("partial-crash replay: a bucket already promoted for this batch is " +
-      "skipped, a bucket left incomplete is redone from its own prior " +
-      "version") {
-    val s = TestSpark.spark
+  private def runs(mvDir: String): Seq[String] =
+    new java.io.File(mvDir).list().toSeq.filter(_.startsWith("batch=")).sorted
+
+  test("a crashed run is invisible to readMv; the replay gives the " +
+      "crash-free result") {
     val mv = freshDir()
-    // keys 0..15 spread across buckets; batch 0 establishes state
-    val b0 = units((0L until 16L).map(k => (k, 1.0, k)): _*)
-    MvStream.processBatch(b0, 0L, mv)
+    // keys 0..15; batch 0 establishes state
+    MvStream.processBatch(units((0L until 16L).map(k => (k, 1.0, k)): _*), 0L, mv)
     val before = state(mv)
-    // simulate a crash mid-batch-1: one bucket fully promoted (complete
-    // v=1), another left as an incomplete version dir (no _OK)
-    val fs = new org.apache.hadoop.fs.Path(mv)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val buckets = fs.listStatus(new org.apache.hadoop.fs.Path(mv))
-      .map(_.getPath.getName).filter(_.startsWith("bucket=")).sorted
-    assert(buckets.length > 1, buckets.mkString(","))
-    val crashed = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(mv, buckets.last), "v=1")
-    fs.mkdirs(crashed) // incomplete: no _OK, garbage content
+    // a crashed write of batch 1: garbage bytes and no _SUCCESS
+    val crashed = new java.io.File(mv, "batch=1")
+    crashed.mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(crashed, "part-00000.snappy.parquet").toPath,
+      "garbage".getBytes("UTF-8"))
+    assert(state(mv) == before, "readMv saw an uncommitted run")
     // batch 1 adds 2.0 at seq 100+k for every key — the replay
     MvStream.processBatch(
       units((0L until 16L).map(k => (k, 2.0, 100L + k)): _*), 1L, mv)
@@ -71,8 +68,24 @@ class MvStreamSuite extends AnyFunSuite {
     assert(after.keySet == before.keySet)
     before.foreach { case (k, (n, sum, last)) =>
       assert(after(k) == ((n + 1, sum + BigDecimal("2.00"), 100L + k)),
-        s"key $k merged wrong after partial-crash replay: ${after(k)}")
+        s"key $k merged wrong after the crashed run's replay: ${after(k)}")
     }
+  }
+
+  test("tiered folds keep the MV equal to its batches; the newest run " +
+      "stays replayable") {
+    val mv = freshDir()
+    (0L until 9L).foreach { b =>
+      MvStream.processBatch(units((1L, 1.0, 10L * b), (b + 2L, 0.5, 10L * b + 1L)), b, mv)
+    }
+    assert(runs(mv).size < 9, s"no fold ran: ${runs(mv)}")
+    assert(runs(mv).contains("batch=8"), "the newest run was folded")
+    val want = Map(1L -> ((9L, BigDecimal("9.00"), 80L))) ++
+      (0L until 9L).map(b => (b + 2L) -> ((1L, BigDecimal("0.50"), 10L * b + 1L)))
+    assert(state(mv) == want)
+    // a retry of the newest batch after the folds must not double-count
+    MvStream.processBatch(units((1L, 1.0, 80L), (10L, 0.5, 81L)), 8L, mv)
+    assert(state(mv) == want, "replay across a fold changed the MV")
   }
 
   test("stream-maintained MV equals the full recompute over events " +

@@ -2,8 +2,8 @@
 # Pre-commit gate: never commit a tree that doesn't compile.
 #
 # Usage:
-#   tools/preflight.sh                 # compile main+test sources, and the
-#                                      # benchmark's build (fast)
+#   tools/preflight.sh                 # compile main+test sources, then
+#                                      # compile and test the benchmark
 #   tools/preflight.sh q_foo q_bar     # compile, then run Verify + DuckDB
 #                                      # oracle compare for the named queries
 #   tools/preflight.sh --all           # compile, then the full all-query gate
@@ -23,9 +23,10 @@ sbt -batch Test/compile
 
 # perfbench/ is its own sbt project that compiles src/main/scala with its
 # own sources, so a src/main change can break the benchmark's build while
-# the root build still compiles.
-echo "[preflight] perfbench sbt compile ..."
-(cd perfbench && sbt -batch compile)
+# the root build still compiles. Its own tests pin the checks every
+# benchmark run makes of the program's output.
+echo "[preflight] perfbench sbt compile + test ..."
+(cd perfbench && sbt -batch compile test)
 
 if [ $# -gt 0 ]; then
   SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
