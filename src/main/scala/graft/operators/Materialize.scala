@@ -58,7 +58,7 @@ private[graft] object Materialize {
   /** Materialize `df` AND report whether any row satisfied `flag` — off
     * a task-side accumulator populated by the SAME materializing job,
     * so the emptiness/progress probes of iterative drivers (the alias
-    * closure's hop check, the label advance's merged-edge check) stop
+    * closure's hop check, the contraction's merged-edge check) stop
     * costing a second Spark action each. At per-batch maintenance scale
     * those probe jobs are pure scheduling overhead: the data is tiny,
     * the job constant is not (r16 profile: the label gate's floor IS
@@ -89,6 +89,94 @@ private[graft] object Materialize {
       probe(org.apache.spark.sql.functions.coalesce(flag,
         org.apache.spark.sql.functions.lit(false)))))
     (out.drop(probeCol), acc.value > 0L)
+  }
+
+  /** Task-side edge list with a row bound — the accumulator behind
+    * [[withEdges]]. Endpoints are kept interleaved in one growable
+    * `Array[Long]`; once more than `bound` edges arrive (in a task or in
+    * the driver's merge) it drops them and only remembers that it
+    * overflowed, so neither a task nor the driver ever holds more than
+    * `bound + 1` edges. Unnamed when registered: a named accumulator's
+    * value is rendered for the listener bus on every task update. */
+  private final class EdgeAccumulator(bound: Int)
+      extends org.apache.spark.util.AccumulatorV2[(Long, Long),
+        Option[Array[Long]]] {
+    private var buf = new Array[Long](16)
+    private var used = 0 // longs in buf: two per edge
+    private var over = false
+    override def isZero: Boolean = synchronized { used == 0 && !over }
+    override def copy(): EdgeAccumulator = {
+      val a = new EdgeAccumulator(bound)
+      a.absorb(this)
+      a
+    }
+    override def reset(): Unit = synchronized {
+      buf = new Array[Long](16); used = 0; over = false
+    }
+    override def add(v: (Long, Long)): Unit = push(v._1, v._2)
+    def push(a: Long, b: Long): Unit = synchronized {
+      if (!over) {
+        if (used / 2 >= bound) overflow()
+        else {
+          grow(used + 2)
+          buf(used) = a; buf(used + 1) = b; used += 2
+        }
+      }
+    }
+    def overflow(): Unit = synchronized {
+      over = true; buf = new Array[Long](0); used = 0
+    }
+    private def grow(n: Int): Unit =
+      if (n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(n, 2 * buf.length))
+    private def absorb(o: EdgeAccumulator): Unit = synchronized {
+      val (oOver, oBuf, oUsed) = o.synchronized((o.over, o.buf, o.used))
+      if (oOver) overflow()
+      else if (!over) {
+        if ((used + oUsed) / 2 > bound) overflow()
+        else {
+          grow(used + oUsed)
+          System.arraycopy(oBuf, 0, buf, used, oUsed); used += oUsed
+        }
+      }
+    }
+    override def merge(other: org.apache.spark.util.AccumulatorV2[
+        (Long, Long), Option[Array[Long]]]): Unit = other match {
+      case o: EdgeAccumulator => absorb(o)
+      case _ => throw new UnsupportedOperationException(
+        s"cannot merge ${other.getClass.getName} into an edge accumulator")
+    }
+    override def value: Option[Array[Long]] = synchronized {
+      if (over) None else Some(java.util.Arrays.copyOf(buf, used))
+    }
+  }
+
+  /** Materialize `df` AND collect, off the SAME materializing job, the
+    * (a, b) value pairs of its rows — when there are at most `bound` of
+    * them. Returns the materialized frame and `Some(endpoints)`, the
+    * pairs interleaved as `a0, b0, a1, b1, …`, or `None` when the frame
+    * holds more than `bound` rows or a row whose `a` or `b` is null.
+    * The contraction closures use it to decide, with no extra action,
+    * whether a contracted graph is small enough to close on the driver
+    * ([[ConnectedComponents.contractionRelabel]]). A retried or
+    * speculative task adds its rows again: the pair list then repeats
+    * edges, which a closure ignores, and the bound counts the repeats,
+    * which can only send a graph to the distributed path. `a` and `b`
+    * must be integral; they are read as longs. */
+  def withEdges(df: DataFrame, a: Column, b: Column,
+      bound: Int): (DataFrame, Option[Array[Long]]) = {
+    require(bound >= 0, s"bound must be non-negative, got $bound")
+    val probeCol = Iterator.from(0).map(i => s"_graft_edge_$i")
+      .find(n => !df.columns.contains(n)).get
+    val acc = new EdgeAccumulator(bound)
+    df.sparkSession.sparkContext.register(acc)
+    val probe = udf { (x: java.lang.Long, y: java.lang.Long) =>
+      if (x == null || y == null) acc.overflow() else acc.push(x, y)
+      true
+    }.asNondeterministic()
+    val out = apply(df.withColumn(probeCol,
+      probe(a.cast("long"), b.cast("long"))))
+    (out.drop(probeCol), acc.value)
   }
 
   /** Task-side distinct-int set — the accumulator behind [[withIntSets]].

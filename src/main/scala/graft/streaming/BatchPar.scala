@@ -46,7 +46,13 @@ package graft.streaming
   * interruptible Spark wait aborts promptly), KEEP joining until all
   * lanes have exited, and only then restore the caller's interrupt flag.
   * Lanes are non-daemon so an in-flight write blocks JVM exit instead
-  * of racing it.
+  * of racing it. That wait is bounded: a lane still alive
+  * [[WedgedLaneLimitMs]] after the first interrupt is wedged — it
+  * ignores interrupts and no Spark wait will end it — so the join logs
+  * its name and stack, abandons it, and fails the batch with an
+  * `IllegalStateException` (the replay rewrites every lane). A lane
+  * that is merely slow — a large write finishing after a stop — has
+  * minutes to exit.
   *
   * Plain threads, one per lane (lanes are 2-3 driver-side action chains;
   * a pool would outlive the batch and pin its inherited thread-locals).
@@ -55,7 +61,14 @@ package graft.streaming
   * (guide §2.6). */
 private[graft] object BatchPar {
 
-  def run(lanes: (() => Unit)*): Unit = {
+  /** How long the join keeps waiting for lanes after the caller is
+    * first interrupted, before it abandons the ones still running. */
+  val WedgedLaneLimitMs: Long = 5L * 60L * 1000L
+
+  def run(lanes: (() => Unit)*): Unit = runWithin(WedgedLaneLimitMs)(lanes: _*)
+
+  /** [[run]] with the post-interrupt join limit given in ms. */
+  private[streaming] def runWithin(limitMs: Long)(lanes: (() => Unit)*): Unit = {
     require(lanes.nonEmpty, "BatchPar.run: no lanes")
     if (lanes.lengthCompare(1) == 0) { lanes.head.apply(); return }
     val errors =
@@ -70,21 +83,41 @@ private[graft] object BatchPar {
       t.start()
       t
     }
-    // Uninterruptible join: never return (or throw) with a lane still
-    // running. On interrupt, forward it to the lanes and keep waiting.
+    // Join every lane. On interrupt, forward it to the lanes and keep
+    // waiting — until the limit after the first interrupt, past which a
+    // lane still running is abandoned.
     var interrupted = false
-    threads.foreach { t =>
-      var joined = false
-      while (!joined) {
-        try { t.join(); joined = true }
-        catch {
+    var deadline = Long.MaxValue
+    def expired = interrupted && System.nanoTime() >= deadline
+    val wedged = threads.filter { t =>
+      while (t.isAlive && !expired) {
+        try {
+          if (!interrupted) t.join()
+          else t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+        } catch {
           case _: InterruptedException =>
-            interrupted = true
+            if (!interrupted) {
+              interrupted = true
+              deadline = System.nanoTime() + limitMs * 1000000L
+            }
             threads.foreach(_.interrupt())
         }
       }
+      t.isAlive
     }
     if (interrupted) Thread.currentThread().interrupt()
+    if (wedged.nonEmpty) {
+      val names = wedged.map(_.getName).mkString(", ")
+      wedged.foreach { t =>
+        System.err.println(s"[batch_par] lane ${t.getName} still running " +
+          s"$limitMs ms after an interrupt; abandoned at:\n" +
+          t.getStackTrace.map("  at " + _).mkString("\n"))
+      }
+      val e = new IllegalStateException(s"BatchPar: lanes $names ignored " +
+        s"an interrupt for $limitMs ms and were abandoned still running")
+      errors.forEach(e.addSuppressed(_))
+      throw e
+    }
     val it = errors.iterator()
     if (it.hasNext) {
       val first = it.next()

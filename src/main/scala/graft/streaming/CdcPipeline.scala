@@ -399,7 +399,10 @@ object CdcPipeline {
     val withOp =
       if (changes.columns.contains("op")) changes
       else changes.withColumn("op", lit("upsert"))
-    withOp.write.parquet(new Path(out, s"batch=$id").toString)
+    // One file per run: the batch's rows are bounded by the micro-batch,
+    // and a run written per partition landed as up to 8 small files that
+    // every reader lists and opens until a fold merges them.
+    withOp.coalesce(1).write.parquet(new Path(out, s"batch=$id").toString)
     IndexCompaction.compactTiered(spark, outDir, transform = latestPerKey): Unit
   }
 

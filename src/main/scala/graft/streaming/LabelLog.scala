@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.{ConnectedComponents, Materialize}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The LOG-STRUCTURED UNION-FIND behind every streaming CLUSTER-LABEL
   * maintainer ([[ClusterStream]] for text minhash clusters,
@@ -34,6 +35,22 @@ import org.apache.spark.sql.functions._
   * the closure to ANY delta generation is sound because a delta's comps
   * are roots as of its batch and aliases at or before that batch cannot
   * name them.
+  *
+  * Both closures run on the DRIVER when they are small. A batch's
+  * contracted graph ([[advance]], through
+  * [[graft.operators.ConnectedComponents.contractionRelabel]]) and the
+  * alias log ([[aliasClosure]], used by lookup, serve and the fold
+  * transform) are materialized once, and the same job collects them when
+  * they hold at most [[graft.operators.ConnectedComponents.LocalEdgeBound]]
+  * (65,536) rows. Union-find on the driver then closes them with no
+  * Spark job, and the result is a local relation that later joins
+  * broadcast. A streaming label batch contracts to a few dozen edges,
+  * which the distributed closure took 12–20 Spark jobs to close, and the
+  * alias closure added 1 + rounds jobs. Larger graphs and logs run
+  * the distributed loops ([[graft.operators.ConnectedComponents
+  * .componentsOfEdges]], [[aliasClosureCounted]]): a store folded only
+  * rarely can hold more aliases than a driver should collect, and the
+  * loops need no bound at all.
   *
   * Exactly-once: both writes are `batch=<id>`-keyed OVERWRITEs and
   * every read excludes the current batch id — a foreachBatch replay
@@ -153,19 +170,56 @@ object LabelLog {
     s.read.schema(DeltaSchema).parquet(deltaRoot(labelsDir))
       .filter(col("batch") < below)
 
-  /** Transitive root of every alias edge by pointer doubling: each round
-    * rewrites `to` to its own alias target when one exists, halving the
-    * longest chain. Chains strictly decrease (a merge points to the
-    * smaller id) so this terminates; the loop runs over the ALIAS LOG
-    * ONLY — merges since the last compaction — never anything
-    * corpus-sized. */
-  private[streaming] def aliasClosure(aliases: DataFrame): DataFrame =
-    aliasClosureCounted(aliases)._1
+  /** Transitive root of every alias edge: (from, to) with `to` chased to
+    * the end of its chain. Chains strictly decrease (a merge points to
+    * the smaller id), and the input is the ALIAS LOG ONLY — merges since
+    * the last compaction — never anything corpus-sized. The distinct
+    * alias rows are materialized once; when there are at most
+    * [[ConnectedComponents.LocalEdgeBound]] of them the same job collects
+    * them and they close on the driver ([[localAliasClosure]]),
+    * returning a local relation. A larger log runs the pointer-doubling
+    * loop of [[aliasClosureCounted]] over the materialized rows. */
+  private[streaming] def aliasClosure(aliases: DataFrame): DataFrame = {
+    val (a, local) = Materialize.withEdges(
+      aliases.select(col("from"), col("to")).distinct(),
+      col("from"), col("to"), ConnectedComponents.LocalEdgeBound)
+    local match {
+      case Some(e) => localAliasClosure(aliases.sparkSession, e)
+      case None => doublingRounds(a, live = true)._1
+    }
+  }
 
-  /** [[aliasClosure]] plus the executed round count — the depth seam the
-    * 64-batch suite pins: rounds = ceil(log2(longest chain)) hop rounds
-    * + 1 terminal no-hop round, so a linear-chain alias log of length L
-    * must close in ~log2(L), never L, rounds.
+  /** [[aliasClosure]] on the driver: `pairs` holds the distinct alias
+    * rows as `from0, to0, from1, to1, …`. Under the log's invariant — a
+    * component is merged away once, into a smaller id — the aliases form
+    * a forest whose chains all descend to their tree's minimum, so each
+    * `from`'s root is the minimum id connected to it: the union-find of
+    * [[ConnectedComponents.localComponents]]. A `from` with two targets
+    * or an alias to a larger id breaks the invariant and raises. */
+  private[streaming] def localAliasClosure(s: SparkSession,
+      pairs: Array[Long]): DataFrame = {
+    val froms = Array.tabulate(pairs.length / 2)(i => pairs(2 * i))
+    froms.indices.foreach { i =>
+      require(pairs(2 * i + 1) < froms(i),
+        s"alias ${froms(i)} -> ${pairs(2 * i + 1)} does not point to a smaller id")
+    }
+    froms.sorted.sliding(2).foreach { w =>
+      require(w.length < 2 || w(0) != w(1),
+        s"alias log names two targets for component ${w(0)}")
+    }
+    val (ids, comps) = ConnectedComponents.localComponents(pairs)
+    val rows = froms.toSeq.map(f =>
+      Row(f, comps(java.util.Arrays.binarySearch(ids, f))))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("from", LongType, false), StructField("to", LongType, false))))
+  }
+
+  /** The pointer-doubling closure plus its executed round count — the
+    * depth seam the 64-batch suite pins: each round rewrites `to` to its
+    * own alias target when one exists, halving the longest chain, so a
+    * linear-chain alias log of length L closes in ceil(log2(L)) hop
+    * rounds + 1 terminal no-hop round, never L. Large logs take this
+    * loop through [[aliasClosure]].
     *
     * ONE Spark job per round (r17): the liveness/hop probes ride the
     * round's own materializing job via [[Materialize.withAny]]'s
@@ -174,10 +228,19 @@ object LabelLog {
     * but the job constant is not (the r16 profile's finding). */
   private[streaming] def aliasClosureCounted(
       aliases: DataFrame): (DataFrame, Int) = {
-    var (a, live) = Materialize.withAny(
+    val (a, live) = Materialize.withAny(
       aliases.select(col("from"), col("to")).distinct(), lit(true))
+    doublingRounds(a, live)
+  }
+
+  /** The doubling rounds over materialized distinct alias rows
+    * `aliases`; `live` says whether it has a row. */
+  private def doublingRounds(aliases: DataFrame,
+      live: Boolean): (DataFrame, Int) = {
+    var a = aliases
+    var hop = live
     var rounds = 0
-    while (live) {
+    while (hop) {
       rounds += 1
       require(rounds <= 64,
         s"alias closure did not converge after $rounds doubling rounds")
@@ -187,7 +250,7 @@ object LabelLog {
         .select(col("from"), coalesce(col("_t"), col("to")).as("to"),
           col("_t").isNotNull.as("_hopped")),
         col("_hopped"))
-      live = hopped
+      hop = hopped
       a = stepped.select(col("from"), col("to"))
     }
     (a, rounds)
@@ -274,32 +337,20 @@ object LabelLog {
     val seeds = Materialize(
       batchIds.select(col("id"), col("id").as("comp")).unionByName(
         lookupComps(spark, labelsDir, batchId, oldEndpoints, lbPre)))
-    // Contract each pair to its endpoints' comps; close the O(batch)
-    // contracted graph (ConnectedComponents.closeWithNewEdges's core,
-    // inlined because here the RELABEL MAP itself is the output — the
-    // full label table must never materialize per batch).
-    // the merged-edge check rides the materializing job (one action,
-    // not checkpoint-then-isEmpty — the r17 job-count diet)
-    val (ce, ceAny) = Materialize.withAny(committed
-      .join(seeds.select(col("id").as("_i1"), col("comp").as("_c1")),
-        col("e1") === col("_i1"))
-      .join(seeds.select(col("id").as("_i2"), col("comp").as("_c2")),
-        col("e2") === col("_i2"))
-      .filter(col("_c1") =!= col("_c2"))
-      .select(col("_c1").as("e1"), col("_c2").as("e2")).distinct(),
-      lit(true))
-    val relabel =
-      if (!ceAny)
+    // Contract each pair to its endpoints' comps and close the O(batch)
+    // contracted graph — ConnectedComponents' one contraction core, the
+    // same as closeWithNewEdges, except that here the RELABEL MAP itself
+    // is the output (the full label table must never materialize per
+    // batch). A small contracted graph closes on the driver.
+    val contracted = ConnectedComponents.contractionRelabel(seeds, committed)
+    val ceAny = contracted.isDefined
+    val relabel = contracted match {
+      case None =>
         seeds.select(col("comp").as("_oc"), col("comp").as("_nc")).limit(0)
-      else
-        // componentsOfEdges (r19, guide §2.4): the relabel map's node
-        // set IS the contracted edge set's endpoints — exactly the
-        // loop's own active set — so the `touched` union+distinct and
-        // the singleton stamp join were re-deriving what the loop
-        // already produces.
-        ConnectedComponents.componentsOfEdges(ce, "e1", "e2")
-          .select(col("id").as("_oc"), col("comp").as("_nc"))
+      case Some(r) =>
+        r.select(col("id").as("_oc"), col("comp").as("_nc"))
           .filter(col("_oc") =!= col("_nc"))
+    }
     // Alias partial: OLD component ids this batch merged away. A fresh
     // batch seed that merged needs no alias (no prior row references
     // it — ids are ingested once); its delta row below carries the

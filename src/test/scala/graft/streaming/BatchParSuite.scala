@@ -98,4 +98,47 @@ class BatchParSuite extends AnyFunSuite {
       .filter(t => t.getName.startsWith("graft-batch-par-") && t.isAlive)
     assert(leaked.isEmpty, s"leaked lane threads: ${leaked.map(_.getName).toSeq}")
   }
+
+  test("a lane that ignores interrupts is abandoned after the join limit") {
+    // A wedged lane (it swallows every interrupt) must not hold the
+    // caller forever: runWithin waits `limitMs` after the first
+    // interrupt, then abandons the lane and fails the batch.
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val wedged = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val result = new java.util.concurrent.atomic.AtomicReference[String]()
+    def deaf(): Unit = {
+      wedged.set(Thread.currentThread())
+      var done = false
+      while (!done) {
+        try done = release.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        catch { case _: InterruptedException => }
+      }
+    }
+    val caller = new Thread(() => {
+      try {
+        BatchPar.runWithin(300L)(() => (), () => deaf())
+        result.set("returned")
+      } catch {
+        case e: IllegalStateException =>
+          result.set(if (Thread.currentThread().isInterrupted)
+            s"interrupted: ${e.getMessage}" else e.getMessage)
+      }
+    }, "batch-par-wedge-caller")
+    try {
+      caller.start()
+      Thread.sleep(100)
+      val t0 = System.nanoTime()
+      caller.interrupt()
+      caller.join(10000)
+      val waitedMs = (System.nanoTime() - t0) / 1000000L
+      assert(!caller.isAlive, "run() must give up on the wedged lane")
+      assert(waitedMs >= 250L && waitedMs < 5000L, s"waited $waitedMs ms")
+      assert(result.get().startsWith("interrupted: ") &&
+        result.get().contains("graft-batch-par-1"), result.get())
+      assert(wedged.get().isAlive, "the wedged lane was abandoned, not ended")
+    } finally {
+      release.countDown()
+      Option(wedged.get()).foreach(_.join(10000))
+    }
+  }
 }

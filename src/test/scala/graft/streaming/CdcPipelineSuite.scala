@@ -241,6 +241,12 @@ class CdcPipelineSuite extends AnyFunSuite {
     assert(runs(out) == Seq("batch=0", "batch=1"))
     assert(snapshot(first) == before)
     assert(s.read.parquet(s"$out/batch=1").count() == 1L)
+    // every run is one part file, whatever the batch frame's partitioning
+    for (r <- runs(out)) {
+      val parts = new java.io.File(out, r).listFiles()
+        .count(_.getName.startsWith("part-"))
+      assert(parts == 1, s"$r holds $parts part files")
+    }
 
     // A truncate-only batch writes just the marker; the wiped rows stay on
     // disk in the older runs, yet readers no longer see them.

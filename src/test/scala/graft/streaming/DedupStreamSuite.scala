@@ -180,4 +180,65 @@ class DedupStreamSuite extends AnyFunSuite {
     assert(collectPairs(DedupStream.readPairs(s, prs)) ==
       Set((1L, 9L), (1L, 12L)))
   }
+
+  test("reading a two-run, 64-bb band store lists on the driver: no " +
+      "listing job before the scan") {
+    val s = TestSpark.spark
+    val idx = java.nio.file.Files.createTempDirectory("dedup_listing")
+      .resolve("index").toString
+    s.range(256)
+      .select(col("id"), (col("id") % 4).as("band"),
+        md5(col("id").cast("string")).as("bkey"),
+        (col("id") / 2 % 64).cast("int").as("bb"), (col("id") % 2).as("batch"))
+      .write.partitionBy("batch", "bb").parquet(idx)
+    val sc = s.sparkContext
+    /** (all jobs, listing jobs) started while `body` builds its frame,
+      * counted by a listener over this test's own job group. */
+    def jobsWhile(body: => DataFrame): (Int, Int) = {
+      val group = s"listing-${java.util.UUID.randomUUID}"
+      val marker = s"$group-marker"
+      val all = new java.util.concurrent.atomic.AtomicInteger()
+      val listing = new java.util.concurrent.atomic.AtomicInteger()
+      val seen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val props = Option(e.properties)
+          props.map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+            if (g == marker) seen.countDown()
+            else if (g == group) {
+              all.incrementAndGet()
+              if (props.flatMap(p => Option(p.getProperty("spark.job.description")))
+                  .exists(_.startsWith("Listing leaf files")))
+                listing.incrementAndGet()
+            }
+          }
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "listing probe")
+        body: Unit
+        // listener events arrive in order: once the marker job is seen,
+        // every job the read started has been counted
+        sc.setJobGroup(marker, "listing probe marker")
+        s.range(1).collect(): Unit
+        assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        (all.get, listing.get)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    def read() = DedupStream.indexBandsRead(s, idx, "id", Seq(0, 1), 2L)
+    // the one job left is schema inference's parquet footer read
+    assert(jobsWhile(read()) == ((1, 0)))
+    // Spark's default threshold (32) lists each run's 64 bb dirs in a job
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prev = s.conf.get(key)
+    try {
+      s.conf.set(key, "32")
+      assert(jobsWhile(read()) == ((3, 2)))
+    } finally s.conf.set(key, prev)
+  }
 }
